@@ -68,52 +68,54 @@ def _probe_degraded(pre_ms: float | None, post_ms: float | None) -> bool:
     )
 
 
-def main() -> int:
-    # 1-min load average BEFORE the session spins up, so it measures the
-    # ambient (neighbor) load, not this bench's own 32 threads.  This
-    # host shares hardware and sees sporadic neighbor storms that
-    # inflate the whole suite 2-3x uniformly (observed: same commit, 25s
-    # at ambient load ~1 vs 68-72s at load ~15-30); reporting it lets a
-    # reader separate engine regressions from measurement-window noise.
-    try:
-        ambient_load1 = round(os.getloadavg()[0], 1)
-    except OSError:
-        ambient_load1 = None
-    # CALM GATE (discipline by code): three consecutive driver artifacts
-    # were snapshotted during neighbor storms (r4-r6, ambient load 11-14)
-    # and recorded 40%+ phantom regressions; the memo asking for a calm
-    # window was ignored twice, so the gate now lives here.  If the
-    # 1-minute load exceeds SPARK_GRAFT_BENCH_CALM_GATE (default 4),
-    # wait for calm — re-sampling every 30s up to
-    # SPARK_GRAFT_BENCH_CALM_WAIT seconds (default 600) — and if the
-    # storm outlasts the wait, run anyway but stamp the artifact
-    # "noisy": true so no reader can mistake the number for an engine
-    # regression.  Progress goes to stderr; stdout stays the one line.
+def wait_for_calm() -> tuple[float | None, float, bool | None]:
+    """CALM GATE: wait until the ambient 1-minute load average is at most
+    $SPARK_GRAFT_BENCH_CALM_GATE (default 4), re-sampling every 30s for
+    up to $SPARK_GRAFT_BENCH_CALM_WAIT seconds (default 600).  Returns
+    ``(load1, waited_s, noisy)``.
+
+    Sample it BEFORE the session spins up, so it measures the neighbors'
+    load, not the harness's own threads: a shared host sees neighbor
+    storms that inflate a whole suite 2-3x uniformly (same commit, 25s at
+    load ~1 vs 68-72s at load ~15-30), and three bench artifacts
+    snapshotted in storms (r4-r6) recorded 40%+ phantom regressions.  A storm that
+    outlasts the wait yields ``noisy`` True, so the artifact is stamped
+    and no reader mistakes it for an engine regression.  ``load1`` and
+    ``noisy`` are None (not calm) when the load cannot be sampled.
+    Progress goes to stderr; stdout stays the harness's one line.
+    """
+
+    def sample() -> float | None:
+        try:
+            return round(os.getloadavg()[0], 1)
+        except OSError:
+            return None
+
     calm_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_GATE", "4"))
     calm_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_WAIT", "600"))
-    calm_waited = 0.0
-    while (
-        ambient_load1 is not None
-        and ambient_load1 > calm_gate
-        and calm_waited < calm_wait
-    ):
+    waited = 0.0
+    load1 = sample()
+    while load1 is not None and load1 > calm_gate and waited < calm_wait:
         print(
-            f"calm-gate: ambient load {ambient_load1} > {calm_gate}, "
-            f"waiting ({calm_waited:.0f}/{calm_wait:.0f}s)",
+            f"calm-gate: ambient load {load1} > {calm_gate}, waiting "
+            f"({waited:.0f}/{calm_wait:.0f}s)",
             file=sys.stderr,
         )
         time.sleep(30)
-        calm_waited += 30
-        ambient_load1 = round(os.getloadavg()[0], 1)
-    # noisy is None (not false) when load could not be sampled: an
-    # unknown-load run must not read as verified-calm.
-    noisy = (ambient_load1 > calm_gate) if ambient_load1 is not None else None
+        waited += 30
+        load1 = sample()
+    noisy = (load1 > calm_gate) if load1 is not None else None
     if noisy:
         print(
             f"calm-gate: storm outlasted {calm_wait:.0f}s wait "
-            f"(load {ambient_load1}); artifact will be stamped noisy",
+            f"(load {load1}); artifact will be stamped noisy",
             file=sys.stderr,
         )
+    return load1, waited, noisy
+
+
+def main() -> int:
+    ambient_load1, calm_waited, noisy = wait_for_calm()
     probe_ms_pre = _cpu_probe_ms()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -234,14 +236,18 @@ def main() -> int:
             if is_streaming:
                 streaming_gate.release()
 
-    # The dedup/similarity families memoize localCheckpoint'd shingle /
-    # signature tables keyed by corpus (operators/dedup.py); in a
-    # long-lived session those blocks outlive the suite.  Between runs the
+    # The session memo (duckdb_cluster_hash_spark/memo.py) holds
+    # localCheckpoint'd shingle / signature tables, probes, trained
+    # trajectories and IVF index builds keyed by corpus; in a long-lived
+    # session those outlive the suite.  Between runs the
     # pool has drained (no running consumers), so the maintenance hook's
     # concurrency contract holds — reclaim executor storage and record how
     # much there was to reclaim.
     from duckdb_cluster_hash_spark.operators.dedup import clear_shared_cache
-    from duckdb_cluster_hash_spark.operators.ranking import release_rank_pins
+    from duckdb_cluster_hash_spark.operators.ranking import (
+        clear_cut_memo,
+        release_rank_pins,
+    )
 
     # PRESTAGE (untimed): FIXTURE SETUP ONLY.  Through round 14 this list
     # had grown to 20 full catalog queries whose session-memo builds
@@ -317,11 +323,13 @@ def main() -> int:
         freed_memo_entries += freed
         # ranking-family pins (persist-backed, recompute-safe): drained
         # pool, so releasing between runs reclaims the cached frames the
-        # FIFO cap hasn't already evicted
+        # FIFO cap hasn't already evicted; forgetting the cut points makes
+        # every run pay the ranking sample jobs, as run 1 does
         release_rank_pins()
+        clear_cut_memo()
         print(
             f"run {run_idx + 1}/{repeats}: makespan {run_walls[-1]}s, "
-            f"freed {freed} memoized checkpoint entries",
+            f"freed {freed} memo entries",
             file=sys.stderr,
         )
 
@@ -347,14 +355,18 @@ def main() -> int:
     # makespan under FAIR scheduling with `workers` threads; `queries_sum` =
     # sum of per-query walls under contention (the round-over-round
     # comparable).  Full per-query map + deltas go to BENCH_LOCAL.json.
-    # 15 slowest + every query the PREVIOUS artifact carried, so the
+    # 15 slowest + the PREVIOUS artifact's 15 slowest, so the
     # round-over-round perf join never degenerates to 4 rows or emits a
     # phantom "dropped_from_bench" for a query that merely left the
-    # top-N (r14's PERF could compare only 4 queries).  ~20 entries x
-    # ~45 bytes stays far under the r02 tail-capture truncation bound
-    # (r02 died mid-way through a 92-entry map).
-    top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:15])
-    for q in prev.get("queries", {}):
+    # top-N (r14's PERF could compare only 4 queries).  Carrying only
+    # the previous top-15, not its whole map, keeps the map at <= 30
+    # entries across rounds, far under the r02 tail-capture truncation
+    # bound (r02 died mid-way through a 92-entry map).
+    def _slowest(qs: dict) -> list[str]:
+        return sorted(qs, key=lambda q: -float(qs[q]))[:15]
+
+    top = {q: timings[q] for q in _slowest(timings)}
+    for q in _slowest(prev.get("queries", {})):
         if q in timings:
             top.setdefault(q, timings[q])
     probe_ms_post = _cpu_probe_ms()

@@ -25,12 +25,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import threading
 import uuid
-import weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from duckdb_cluster_hash_spark import memo as _memo
 
 # Where the exact-substring family stages its corpus-sized position
 # tables.  None (default) = persist() in executor memory/disk — right
@@ -116,147 +116,52 @@ def _h60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-# Session-lifetime memo of materialized (localCheckpoint) dedup subtrees,
-# weakly keyed by the INPUT DataFrame object.  load_table memoizes one
-# DataFrame per (session, path), so the three text near-dup catalog queries
-# (Jaccard, MinHash, components) over the same corpus share ONE shingle
-# explode / signature pass instead of re-shingling per query — in a shared
-# engine session (the bench, a notebook, a long-lived service) that is the
-# dominant cost of the dedup suite.  Entries die with the input DataFrame;
-# results are bit-identical (materialization only, no semantic change).
-# localCheckpoint stores MEMORY_AND_DISK, so oversized entries spill rather
-# than OOM; at true 100 TB the equivalent of this memo is a materialized
-# intermediate table (write the shingle table once, scan it per query), not
-# session cache — the memo is the single-session/bench/notebook optimization.
-_SHARED_MATERIALIZED: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_SHARED_LOCK = threading.Lock()
-
-
 def _shared_checkpoint(df: DataFrame, key: tuple, build) -> DataFrame:
-    """One builder per (corpus, key); concurrent requesters block on the
-    builder's event and reuse its checkpoint.  Without the exclusivity a
-    concurrent suite (the bench's 8 workers) launches the same expensive
-    materialization N times and nobody shares anything.
+    """A dedup subtree over the corpus ``df``, localCheckpoint'ed once per
+    session in the shared memo (``memo.shared``), so the text near-dup
+    queries over one corpus (Jaccard, MinHash, components) share ONE
+    shingle explode / signature pass instead of re-shingling per query.
+    Results are bit-identical (materialization only).  localCheckpoint
+    stores MEMORY_AND_DISK, so oversized entries spill rather than OOM;
+    at 100 TB the equivalent is a materialized intermediate table.
 
     ``build`` returns either a LAZY DataFrame, or ``(frame, cleanup)``
     where ``cleanup()`` releases the builder's intermediates; the single
     eager checkpoint HERE is what materializes the frame, and cleanup
     runs only after it completes — so intermediates are never released
     under the materializing job, and the run table is checkpointed
-    exactly once (the old build-side inner checkpoint paid a redundant
-    second materialization and stored the table twice)."""
-    with _SHARED_LOCK:
-        per_df = _SHARED_MATERIALIZED.get(df)
-        if per_df is None:
-            per_df = {}
-            _SHARED_MATERIALIZED[df] = per_df
-        entry = per_df.get(key)
-        if entry is None:
-            entry = {"done": threading.Event(), "df": None}
-            per_df[key] = entry
-            is_builder = True
-        else:
-            is_builder = False
-    if is_builder:
-        try:
-            built = build()
-            cleanup = None
-            if isinstance(built, tuple):
-                built, cleanup = built
-            entry["df"] = built.localCheckpoint(eager=True)
-            if cleanup is not None:
-                cleanup()
-        except BaseException:
-            with _SHARED_LOCK:
-                per_df.pop(key, None)  # let a later caller rebuild
-            entry["done"].set()
-            raise
-        entry["done"].set()
-        return entry["df"]
-    entry["done"].wait()
-    if entry["df"] is None:  # builder failed after we enqueued; rebuild
-        return _shared_checkpoint(df, key, build)
-    return entry["df"]
+    exactly once."""
 
+    def checkpoint() -> DataFrame:
+        built = build()
+        cleanup = None
+        if isinstance(built, tuple):
+            built, cleanup = built
+        out = built.localCheckpoint(eager=True)
+        if cleanup is not None:
+            cleanup()
+        return out
 
-# External per-session memos (e.g. the perceptron trajectory memo in
-# plans/docs.py) register a clearer here so every harness that calls
-# clear_shared_cache() — bench repeats, the scale probe, check_oracle,
-# the fuzz soak — resets ALL session memos through the ONE hook instead
-# of each harness having to know about each memo.  A clearer takes the
-# same optional corpus frame and returns the number of entries dropped.
-_EXTRA_CLEARERS: list = []
-
-
-def register_cache_clearer(fn) -> None:
-    """Register ``fn(df | None) -> int`` to run inside every
-    :func:`clear_shared_cache` call (idempotent per function object)."""
-    if fn not in _EXTRA_CLEARERS:
-        _EXTRA_CLEARERS.append(fn)
+    return _memo.shared(df, ("checkpoint", *key), checkpoint)
 
 
 def clear_shared_cache(df: DataFrame | None = None) -> int:
-    """Drop the session's memoized dedup intermediates (public hook for
-    long-lived sessions, where the per-corpus localCheckpoint blocks
-    would otherwise live as long as the corpus DataFrame does).
+    """Drop the session's memoized intermediates (every ``memo.shared``
+    entry: dedup checkpoints, emb probes, trained trajectories, IVF
+    index builds) of corpus ``df``, or of every corpus when None, and
+    return the number of entries dropped.  In-flight builds are left
+    alone and clear on a later call.  The next call over the corpus
+    rebuilds.
 
-    Forgets the memo entries — the next dedup call over the same corpus
-    rebuilds from lineage.  Block reclamation is at GC, not eager:
-    entries are localCheckpoint'ed, and Dataset.unpersist only uncaches
-    CacheManager-registered plans, so the checkpoint RDD blocks are
-    freed when the dropped DataFrame (and its py4j handle) is
-    garbage-collected and the ContextCleaner sweeps the orphaned RDD.
-    With ``df`` given, only that corpus's entries are dropped; with
-    ``None``, all.
-    Returns the number of entries cleared.  In-flight builders (entry
-    not yet ``done``) are left untouched and clear on a later call.
+    Checkpoint blocks are reclaimed when the dropped frame is
+    garbage-collected and the ContextCleaner sweeps its RDD
+    (Dataset.unpersist only uncaches CacheManager-registered plans).
 
     CONCURRENCY CONTRACT: this is a maintenance hook — quiesce jobs
-    that CONSUME the targeted corpus's dedup results before calling.
-    localCheckpoint truncates lineage, so unpersisting blocks out from
-    under a running consumer job fails that job rather than recomputing
-    (Spark semantics, not recoverable here).  Builders are protected;
-    running consumers are the caller's responsibility.
-    """
-    cleared = 0
-    with _SHARED_LOCK:
-        corpora = [df] if df is not None else list(_SHARED_MATERIALIZED.keys())
-        for corpus in corpora:
-            per_df = _SHARED_MATERIALIZED.get(corpus)
-            if not per_df:
-                continue
-            for key in list(per_df):
-                entry = per_df[key]
-                if not entry["done"].is_set():
-                    continue  # builder still running; leave it
-                if entry["df"] is not None:
-                    try:
-                        entry["df"].unpersist()
-                    except Exception:
-                        pass  # session already stopped; memo is moot
-                del per_df[key]
-                cleared += 1
-            if not per_df:
-                _SHARED_MATERIALIZED.pop(corpus, None)
-    for fn in list(_EXTRA_CLEARERS):
-        try:
-            cleared += int(fn(df) or 0)
-        except Exception as exc:
-            # A dead session's clearer must not mask the others — but a
-            # SILENT failure would leave its memo live, and bench
-            # repeats / scale-probe passes would time memo hits (the
-            # exact timing pollution this hook exists to prevent), so
-            # make the skip visible in harness output.
-            import sys as _sys
-
-            print(
-                f"clear_shared_cache: clearer {getattr(fn, '__qualname__', fn)!r} "
-                f"raised {exc!r}; its memo may still be live",
-                file=_sys.stderr,
-            )
-    return cleared
+    that CONSUME the targeted corpus's memoized results before calling.
+    localCheckpoint truncates lineage, so a running consumer whose
+    blocks go fails rather than recomputing."""
+    return _memo.clear(df)
 
 
 # ---------------------------------------------------------------------------

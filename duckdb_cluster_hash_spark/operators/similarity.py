@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from duckdb_cluster_hash_spark import memo as _memo
+
 __all__ = [
     "dot_fold",
     "cosine_topk",
@@ -397,43 +399,28 @@ def ivf_probe_cells(
     return sorted(range(n_cells), key=lambda c: (-dots[c], c))[:nprobe]
 
 
-# index builds already done this session, weakly keyed by the INPUT
-# DataFrame (like dedup._SHARED_MATERIALIZED) so the memo is tied to the
-# corpus identity, not just the output path: writing a DIFFERENT corpus
-# (filtered/transformed) to the same path is a fresh build, never a
-# silent no-op serving a stale index.  load_table canonicalizes one
-# DataFrame per (session, path), so repeated probes over the same corpus
-# still pay the build exactly once; a session restart always rebuilds.
-import weakref as _weakref
-
-_INDEX_WRITTEN: "_weakref.WeakKeyDictionary[DataFrame, set]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def ivf_write_index(
     emb: DataFrame,
     path: str,
     dim: int = 64,
     n_cells: int = 16,
     vec_col: str = "embedding",
-    force: bool = False,
 ) -> None:
     """Materialize the IVF index: the corpus re-written as parquet
     partitioned by cell id.  At 100 TB this is the one-off index build;
     every subsequent probe is pure partition pruning (reads
     nprobe/n_cells of the data, no shuffle, no full scan).  The build is
-    memoized per (input DataFrame, parameters) — repeated ANN queries in
-    one session pay the build once, which is the amortization the index
-    exists for, while a different corpus aimed at the same path always
-    rewrites; pass ``force=True`` to rebuild unconditionally."""
-    written = _INDEX_WRITTEN.setdefault(emb, set())
-    key = (path, dim, n_cells, vec_col)
-    if not force and key in written:
-        return
-    tagged = ivf_assign_cells(emb, dim=dim, n_cells=n_cells, vec_col=vec_col)
-    tagged.write.mode("overwrite").partitionBy("cell").parquet(path)
-    written.add(key)
+    memoized in the session memo per (input frame, parameters) —
+    repeated ANN queries in one session pay the build once, which is the
+    amortization the index exists for, while a different corpus aimed at
+    the same path always rewrites, and ``clear_shared_cache`` forgets
+    the build so the next call writes again."""
+
+    def build() -> None:
+        tagged = ivf_assign_cells(emb, dim=dim, n_cells=n_cells, vec_col=vec_col)
+        tagged.write.mode("overwrite").partitionBy("cell").parquet(path)
+
+    _memo.shared(emb, ("ivf", path, dim, n_cells, vec_col), build)
 
 
 def ivf_probe_topk(

@@ -1284,7 +1284,7 @@ def audio_dhash_shared(docs: DataFrame) -> DataFrame:
     """Per-clip energy-dHash table ``(doc_id, b0..b7)``
     (operators/multimodal.wav_energy_dhash over attach_fake_wav media
     at the near-dup clip length), materialized once per corpus per
-    session through the dedup family memo and shared between the audio
+    session through the session memo and shared between the audio
     near-dup pair and bill queries — one decode + fingerprint pass, 8
     small ints per clip on the wire."""
     from duckdb_cluster_hash_spark.operators import multimodal as _mm
@@ -1304,7 +1304,7 @@ def video_dhash_shared(docs: DataFrame) -> DataFrame:
     """Per-clip luma-dHash table ``(doc_id, b0..b7)``
     (operators/multimodal.y4m_luma_dhash over attach_fake_y4m media at
     the near-dup clip length), materialized once per corpus per
-    session through the dedup family memo and shared between the video
+    session through the session memo and shared between the video
     near-dup pair and bill queries — one decode + fingerprint pass, 8
     small ints per clip on the wire."""
     from duckdb_cluster_hash_spark.operators import multimodal as _mm

@@ -8,6 +8,7 @@ window, and rotation stay in catalog.py.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from duckdb_cluster_hash_spark import memo as _memo
 from duckdb_cluster_hash_spark import oracle_text as _ot
 from duckdb_cluster_hash_spark.operators import dedup as _dd
 from duckdb_cluster_hash_spark.operators import similarity as _sim
@@ -499,7 +500,7 @@ def docs_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_rep_shared(docs: DataFrame) -> DataFrame:
     """Per-document quality/dedup gate table ``(doc_id, lang, nch,
     n_tokens, rep, quality, lang_id)``, materialized ONCE per corpus
-    per session through the dedup family memo
+    per session through the session memo
     (operators/dedup._shared_checkpoint) and shared between
     ``docs_corpus_curation`` (keep/drop report) and
     ``docs_curation_pipeline`` (quality gate stage): the regex-heavy
@@ -598,7 +599,7 @@ _CURATED_ATEXIT = False
 def gopher_rep_shared(docs: DataFrame) -> DataFrame:
     """Per-document Gopher top-bigram repetition table ``(doc_id,
     source, rep_bp)`` (docs with >= 2 letter-words only), materialized
-    ONCE per corpus per session through the dedup family memo
+    ONCE per corpus per session through the session memo
     (operators/dedup._shared_checkpoint) and shared between
     ``docs_gopher_repetition`` (per-source rollup) and
     ``docs_curation_pipeline`` (per-doc quality gate): the bigram
@@ -3935,76 +3936,19 @@ def perceptron_features(
     )
 
 
-# Per-corpus trajectory memo (the dedup-family-memo pattern, driver-side
-# rows instead of a checkpointed frame): the trainer and the filter
-# query share one 8-aggregate training run per corpus per session.
-# Builder-EXCLUSIVE like dedup._shared_checkpoint: a concurrent suite
-# (bench's 8 workers running trainer + filter together) must not launch
-# the training aggregates twice; and the memo registers with
-# clear_shared_cache so every timing harness's between-runs reset
-# (bench repeats, the scale probe's per-pass clears) retrains instead
-# of silently measuring a memo hit.
-import threading as _threading
-import weakref as _weakref
-
-_PERC_MEMO: "_weakref.WeakKeyDictionary[DataFrame, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-_PERC_LOCK = _threading.Lock()
-
-
-def _clear_perceptron_memo(df: DataFrame | None = None) -> int:
-    with _PERC_LOCK:
-        if df is not None:
-            per = _PERC_MEMO.pop(df, None)
-            return len(per) if per else 0
-        n = sum(len(p) for p in _PERC_MEMO.values())
-        _PERC_MEMO.clear()
-        return n
-
-
-_dd.register_cache_clearer(_clear_perceptron_memo)
-
-
 def perceptron_trajectory_shared(docs: DataFrame, iters: int = 8):
     """Memoized :func:`perceptron_train_trajectory` keyed on the corpus
     frame (plan-memoized by sources/tables, so every catalog query sees
     the same object): the 8 training aggregates run once per corpus per
     session, shared by ``docs_quality_perceptron`` (trajectory view) and
-    ``docs_quality_perceptron_filter`` (apply view).  The memo holds 8
-    tuples of 8 ints — driver-side, bounded; cleared through
-    ``operators.dedup.clear_shared_cache`` like every other session
-    memo.  One builder per (corpus, iters): latecomers block on the
-    builder's event and reuse its rows instead of re-training."""
-    with _PERC_LOCK:
-        per = _PERC_MEMO.get(docs)
-        if per is None:
-            per = {}
-            _PERC_MEMO[docs] = per
-        entry = per.get(iters)
-        if entry is None:
-            entry = {"done": _threading.Event(), "rows": None}
-            per[iters] = entry
-            is_builder = True
-        else:
-            is_builder = False
-    if is_builder:
-        try:
-            entry["rows"] = perceptron_train_trajectory(
-                perceptron_features(docs), iters
-            )
-        except BaseException:
-            with _PERC_LOCK:
-                if _PERC_MEMO.get(docs, {}).get(iters) is entry:
-                    _PERC_MEMO[docs].pop(iters, None)
-            entry["done"].set()
-            raise
-        entry["done"].set()
-        return entry["rows"]
-    entry["done"].wait()
-    if entry["rows"] is None:  # builder failed after we enqueued; retry
-        return perceptron_trajectory_shared(docs, iters)
-    return entry["rows"]
+    ``docs_quality_perceptron_filter`` (apply view), however the two are
+    interleaved.  The memo holds 8 tuples of 8 ints — driver-side,
+    bounded — in the session memo, so ``clear_shared_cache`` retrains."""
+    return _memo.shared(
+        docs,
+        ("perceptron", iters),
+        lambda: perceptron_train_trajectory(perceptron_features(docs), iters),
+    )
 
 
 @query("docs_quality_perceptron", oracle=_ot.quality_perceptron_sql(8))
@@ -4581,32 +4525,6 @@ def _unigram_iter_ctes(i: int) -> str:
     )
 
 
-# Per-(corpus, split) unigram-training memo — the perceptron-trajectory
-# pattern (docs.py:3884): the trainer's 4 E-step jobs + seed collects
-# run once per corpus per split per session, shared between the
-# trajectory query (full corpus) and the encode query (90% train
-# split), builder-EXCLUSIVE under bench's concurrent workers, and
-# registered with clear_shared_cache so every timing harness's
-# between-runs reset retrains instead of silently measuring a memo hit.
-_UNI_MEMO: "_weakref.WeakKeyDictionary[DataFrame, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-_UNI_LOCK = _threading.Lock()
-
-
-def _clear_unigram_memo(df: DataFrame | None = None) -> int:
-    with _UNI_LOCK:
-        if df is not None:
-            per = _UNI_MEMO.pop(df, None)
-            return len(per) if per else 0
-        n = sum(len(p) for p in _UNI_MEMO.values())
-        _UNI_MEMO.clear()
-        return n
-
-
-_dd.register_cache_clearer(_clear_unigram_memo)
-
-
 def unigram_train_shared(
     spark: SparkSession,
     docs: DataFrame,
@@ -4616,39 +4534,15 @@ def unigram_train_shared(
     """Memoized :func:`unigram_train` keyed on (corpus frame, split, k)
     — ``split`` is None for the full corpus (the trajectory query) or
     ``'train90'`` for the doc_id % 10 != 0 split (the encode query's
-    training side).  Latecomers block on the builder's event and reuse
-    its (trajectory, pieces) instead of re-training."""
-    memo_key = (split, k)
-    with _UNI_LOCK:
-        per = _UNI_MEMO.get(docs)
-        if per is None:
-            per = {}
-            _UNI_MEMO[docs] = per
-        entry = per.get(memo_key)
-        if entry is None:
-            entry = {"done": _threading.Event(), "out": None}
-            per[memo_key] = entry
-            is_builder = True
-        else:
-            is_builder = False
-    if is_builder:
-        try:
-            where = None if split is None else F.col("doc_id") % 10 != 0
-            entry["out"] = unigram_train(
-                spark, _unigram_wordfreq(docs, where), k
-            )
-        except BaseException:
-            with _UNI_LOCK:
-                if _UNI_MEMO.get(docs, {}).get(memo_key) is entry:
-                    _UNI_MEMO[docs].pop(memo_key, None)
-            entry["done"].set()
-            raise
-        entry["done"].set()
-        return entry["out"]
-    entry["done"].wait()
-    if entry["out"] is None:  # builder failed after we enqueued; retry
-        return unigram_train_shared(spark, docs, split, k)
-    return entry["out"]
+    training side).  The trainer's E-step jobs and seed collects run
+    once per corpus per split per session, however the two queries are
+    interleaved; ``clear_shared_cache`` retrains."""
+    where = None if split is None else F.col("doc_id") % 10 != 0
+    return _memo.shared(
+        docs,
+        ("unigram", split, k),
+        lambda: unigram_train(spark, _unigram_wordfreq(docs, where), k),
+    )
 
 
 def _unigram_train_oracle_sql(k: int = UNIGRAM_ITERS) -> str:

@@ -7,90 +7,29 @@ window, and rotation stay in catalog.py.
 
 from __future__ import annotations
 
-import threading
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from duckdb_cluster_hash_spark import memo as _memo
 from duckdb_cluster_hash_spark import oracle_text as _ot
 from duckdb_cluster_hash_spark.operators import similarity as _sim
 from duckdb_cluster_hash_spark.plans._registry import _t, query
 
-# Session memo of the two corpus probes nearly every emb query repeats —
-# the row count (scaled_n_cells input) and the vec_id=0 query row — each
-# a full-scan driver job.  Ten queries re-ran them independently (~15
-# probe jobs per suite; under the bench's 8-way FAIR contention each
-# waits in the scheduler queue, so the probes, not the ANN work, set
-# several queries' contended walls).  Weakly keyed on the corpus
-# DataFrame (load_table memoizes one object per (session, path)) and
-# cleared through the dedup family's clear_shared_cache hook, exactly
-# like the perceptron/unigram memos.  Scalars only — never a corpus
-# collect (the probe row is one embedding + label).
-_EMB_PROBE: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_EMB_PROBE_LOCK = threading.Lock()
-
-
-def _emb_probe(emb: DataFrame, key: str, compute):
-    """One prober per (corpus, key); the global lock guards only the memo
-    dict, never a Spark action — under the bench's 8-way contention the
-    old whole-probe lock serialized every emb query's probe behind
-    whichever probe was in flight, even for a different key.  Same
-    builder/Event pattern as dedup._shared_checkpoint: concurrent
-    requesters of the SAME key block on the builder's event; a failed
-    builder unregisters so a later caller rebuilds."""
-    with _EMB_PROBE_LOCK:
-        memo = _EMB_PROBE.setdefault(emb, {})
-        entry = memo.get(key)
-        if entry is None:
-            entry = {"done": threading.Event(), "val": None, "ok": False}
-            memo[key] = entry
-            is_builder = True
-        else:
-            is_builder = False
-    if is_builder:
-        try:
-            entry["val"] = compute()
-            entry["ok"] = True
-        except BaseException:
-            with _EMB_PROBE_LOCK:
-                memo.pop(key, None)  # let a later caller rebuild
-            entry["done"].set()
-            raise
-        entry["done"].set()
-        return entry["val"]
-    entry["done"].wait()
-    if not entry["ok"]:  # builder failed after we enqueued; rebuild
-        return _emb_probe(emb, key, compute)
-    return entry["val"]
-
-
+# The corpus probes nearly every emb query repeats — the row count
+# (scaled_n_cells input) and the vec_id=0 query row — are each a
+# full-scan driver job; under the bench's 8-way FAIR contention each
+# waits in the scheduler queue, so unshared probes, not the ANN work,
+# set several queries' contended walls.  They live in the session memo
+# under ("emb", name) keys.  Scalars and bounded rows only — never a
+# corpus collect.
 def _emb_n(emb: DataFrame) -> int:
-    return _emb_probe(emb, "n", lambda: int(emb.count()))
+    return _memo.shared(emb, ("emb", "n"), lambda: int(emb.count()))
 
 
 def _emb_q0(emb: DataFrame):
     """The vec_id = 0 probe row (vec_id, label, embedding)."""
-    return _emb_probe(
-        emb, "q0", lambda: emb.where(F.col("vec_id") == 0).head()
+    return _memo.shared(
+        emb, ("emb", "q0"), lambda: emb.where(F.col("vec_id") == 0).head()
     )
-
-
-def _clear_emb_probe(df=None) -> int:
-    with _EMB_PROBE_LOCK:
-        if df is not None:
-            return 1 if _EMB_PROBE.pop(df, None) is not None else 0
-        n = len(_EMB_PROBE)
-        # drain rather than rebind: WeakKeyDictionary has no .clear race
-        for k in list(_EMB_PROBE.keys()):
-            _EMB_PROBE.pop(k, None)
-        return n
-
-
-from duckdb_cluster_hash_spark.operators import dedup as _dd  # noqa: E402
-
-_dd.register_cache_clearer(_clear_emb_probe)
 
 
 @query("emb_cosine_topk", oracle=_ot.cosine_topk_sql(0, 10, 64))
@@ -521,9 +460,9 @@ def emb_binary_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = 64
     # per-dimension means probe-memoized (r15, one full-scan action per
     # corpus per session instead of per call), like _emb_n/_emb_q0
-    means_row = _emb_probe(
+    means_row = _memo.shared(
         emb,
-        "ham_means",
+        ("emb", "ham_means"),
         lambda: emb.select(
             F.array(
                 *[
@@ -1026,9 +965,9 @@ def emb_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench's contention the collect action waited a full FAIR-queue
     # turn per run; scalars/bounded rows only, cleared through
     # clear_shared_cache with the other probes
-    evals = _emb_probe(
+    evals = _memo.shared(
         emb,
-        "knn_evals",
+        ("emb", "knn_evals"),
         lambda: emb.where(is_eval)
         .select("vec_id", "label", "embedding")
         .collect(),

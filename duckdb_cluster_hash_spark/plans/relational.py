@@ -14,8 +14,9 @@ from duckdb_cluster_hash_spark.plans._shared import _os_path_basename
 
 def _copurchase_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct canonical (p1 < p2) part co-purchase edges, memoized per
-    session via the dedup shared-checkpoint registry (weakly keyed on
-    the lineitem table object, cleared by ``clear_shared_cache``).
+    session via ``dedup._shared_checkpoint`` (the session memo, weakly
+    keyed on the lineitem table object, cleared by
+    ``clear_shared_cache``).
 
     Both iterative part-graph queries (k-core, link prediction) peel
     exactly this table; before round 14 each rebuilt it — the basket

@@ -45,9 +45,9 @@ _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], Data
     weakref.WeakKeyDictionary()
 )
 # Construction is serialized: the plan cache is not just a speedup — the
-# session memos (dedup._shared_checkpoint, the perceptron/unigram
-# trajectory memos) are WEAKLY KEYED BY THE FRAME OBJECT, so every
-# caller must see ONE canonical frame per (sf_dir, table).  Without the
+# session memo (duckdb_cluster_hash_spark.memo) is WEAKLY KEYED BY THE
+# FRAME OBJECT, so every caller must see ONE canonical frame per
+# (sf_dir, table).  Without the
 # lock, bench's 8 concurrent workers race the miss path, each builds
 # its own frame, memos land on transient objects, and the timed region
 # silently re-runs work the prestage already memoized (observed: the

@@ -162,7 +162,7 @@ def main(names):
             freed = clear_shared_cache()
             release_rank_pins()  # persist-backed, recompute-safe
             if freed:
-                print(f"-- cleared {freed} memoized checkpoint entries "
+                print(f"-- cleared {freed} memo entries "
                       f"after family '{prev_family}'")
             freed_total += freed
         prev_family = fam(name)
@@ -212,7 +212,7 @@ def main(names):
             print(f"OK   {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
     freed_total += clear_shared_cache()
     print(f"\n{len(selected) - failures}/{len(selected)} passed "
-          f"({freed_total} memoized checkpoint entries reclaimed)")
+          f"({freed_total} memo entries reclaimed)")
     # Full-catalog runs leave a durable stamp (ORACLE_SF001.json /
     # ORACLE_SF01.json ...) so the once-per-round scale pass at sf0.1 —
     # which catches tie/overflow divergences the sf0.01 gate can't —

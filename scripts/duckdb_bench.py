@@ -44,23 +44,9 @@ TABLES = (
 
 
 def main(names: list[str]) -> int:
-    try:
-        load1 = round(os.getloadavg()[0], 1)
-    except OSError:
-        load1 = None
-    calm_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_GATE", "4"))
-    calm_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_WAIT", "600"))
-    waited = 0.0
-    while load1 is not None and load1 > calm_gate and waited < calm_wait:
-        print(
-            f"calm-gate: ambient load {load1} > {calm_gate}, waiting "
-            f"({waited:.0f}/{calm_wait:.0f}s)",
-            file=sys.stderr,
-        )
-        time.sleep(30)
-        waited += 30
-        load1 = round(os.getloadavg()[0], 1)
-    noisy = (load1 > calm_gate) if load1 is not None else None
+    import bench
+
+    load1, _, noisy = bench.wait_for_calm()
 
     import __spark_entry__ as entrymod
 

@@ -54,28 +54,11 @@ def main() -> int:
     # Same calm discipline as bench.py (this script is the round's
     # before/after evidence harness — an isolated wall measured in a
     # neighbor-storm window must never be stamped as evidence unmarked):
-    # wait for ambient 1-min load <= the calm gate, and bracket the runs
-    # with bench.py's serial CPU probe so a storm that STARTS mid-run is
-    # visible in the payload.
+    # wait for calm, and bracket the runs with bench.py's serial CPU
+    # probe so a storm that STARTS mid-run is visible in the payload.
     import bench as _bench
 
-    calm_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_GATE", "4"))
-    calm_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_WAIT", "600"))
-    waited = 0.0
-    try:
-        load1 = round(os.getloadavg()[0], 1)
-    except OSError:
-        load1 = None
-    while load1 is not None and load1 > calm_gate and waited < calm_wait:
-        print(
-            f"calm-gate: ambient load {load1} > {calm_gate}, waiting "
-            f"({waited:.0f}/{calm_wait:.0f}s)",
-            file=sys.stderr,
-        )
-        time.sleep(30)
-        waited += 30
-        load1 = round(os.getloadavg()[0], 1)
-    noisy = (load1 > calm_gate) if load1 is not None else None
+    load1, _, noisy = _bench.wait_for_calm()
     probe_ms_pre = _bench._cpu_probe_ms()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

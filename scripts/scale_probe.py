@@ -240,28 +240,13 @@ def main() -> int:
     factors = [int(a) for a in sys.argv[1:]] or [3]
     big_dirs = {f: ensure_corpus(f) for f in factors}
 
-    # CALM GATE — bench.py's discipline, same env knobs: exponents are
-    # RATIOS of wall times, and a neighbor storm landing on one side of
-    # the ratio fabricates (or hides) a scaling problem just as surely
-    # as it fabricates a bench regression.  Wait for ambient calm; if
-    # the storm outlasts the wait, stamp SCALE.md noisy.
-    try:
-        load1 = round(os.getloadavg()[0], 1)
-    except OSError:
-        load1 = None
-    calm_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_GATE", "4"))
-    calm_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_WAIT", "600"))
-    waited = 0.0
-    while load1 is not None and load1 > calm_gate and waited < calm_wait:
-        print(
-            f"calm-gate: ambient load {load1} > {calm_gate}, waiting "
-            f"({waited:.0f}/{calm_wait:.0f}s)",
-            file=sys.stderr,
-        )
-        time.sleep(30)
-        waited += 30
-        load1 = round(os.getloadavg()[0], 1)
-    noisy = (load1 > calm_gate) if load1 is not None else None
+    # CALM GATE — bench.py's: exponents are RATIOS of wall times, and a
+    # neighbor storm landing on one side of the ratio fabricates (or
+    # hides) a scaling problem just as surely as it fabricates a bench
+    # regression.  A storm that outlasts the wait stamps SCALE.md noisy.
+    import bench
+
+    load1, waited, noisy = bench.wait_for_calm()
 
     from pyspark.sql import SparkSession
 
@@ -614,9 +599,8 @@ def main() -> int:
         )
     lines.append("")
     calm_note = (
-        "calm-gated (ambient <= "
-        f"{calm_gate})" if not noisy else f"NOISY RUN (ambient {load1} after "
-        f"{calm_wait:.0f}s wait) — exponents unreliable"
+        f"calm-gated (ambient {load1})" if not noisy else f"NOISY RUN "
+        f"(ambient {load1} after {waited:.0f}s wait) — exponents unreliable"
     )
     lines.append(
         f"Stamped {time.strftime('%Y-%m-%d %H:%M:%S UTC', time.gmtime())}; "

@@ -39,3 +39,21 @@ def test_probe_degraded_unknown_probes_do_not_flag():
     assert bench._probe_degraded(None, 300.0) is False
     assert bench._probe_degraded(100.0, None) is False
     assert bench._probe_degraded(0.0, 100.0) is False
+
+
+def test_wait_for_calm_survives_load_resample_failure(monkeypatch):
+    # a storm at the first sample, then loadavg becomes unreadable: the
+    # gate must report unknown load, not crash the harness
+    calls = []
+
+    def getloadavg():
+        calls.append(1)
+        if len(calls) > 1:
+            raise OSError("loadavg unavailable")
+        return (99.0, 99.0, 99.0)
+
+    monkeypatch.setattr(bench.os, "getloadavg", getloadavg)
+    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
+    load1, waited, noisy = bench.wait_for_calm()
+    assert (load1, noisy) == (None, None)
+    assert waited == 30 and len(calls) == 2

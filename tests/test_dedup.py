@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_cluster_hash_spark import memo
 from duckdb_cluster_hash_spark.operators import dedup as dd
 from duckdb_cluster_hash_spark.sources import load_table
 
@@ -197,7 +198,7 @@ def test_chunk_dedup_histogram_shared_chunk(spark):
 def test_span_coverage_memo_keyed_by_corpus_identity(spark):
     """The pos-gram memo must never serve corpus A's checkpoint to
     corpus B aimed at the same (id_col, text_col, n) params — the key is
-    the DataFrame object itself (WeakKeyDictionary), so two different
+    the DataFrame object itself (the memo's weak owner), so two different
     corpora get independent entries and independent results."""
     a = spark.createDataFrame(
         [(1, "one two three four five six seven eight nine"),
@@ -214,7 +215,7 @@ def test_span_coverage_memo_keyed_by_corpus_identity(spark):
           dd.duplicated_span_coverage(b, "doc_id", "text", n=8).collect()}
     assert ra == {1: 1, 2: 1}        # the shared 8-gram at position 0
     assert rb == {7: 0}              # single doc: nothing shared
-    assert a in dd._SHARED_MATERIALIZED and b in dd._SHARED_MATERIALIZED
+    assert a in memo._STORE and b in memo._STORE
 
 
 def test_clear_shared_cache_reclaims_and_rebuilds(spark):
@@ -224,13 +225,13 @@ def test_clear_shared_cache_reclaims_and_rebuilds(spark):
     )
     first = dd.duplicated_span_coverage(df, "doc_id", "text", n=8).collect()
     assert dd.clear_shared_cache(df) >= 1
-    assert df not in dd._SHARED_MATERIALIZED
+    assert df not in memo._STORE
     # a fresh call rebuilds from lineage and agrees
     again = dd.duplicated_span_coverage(df, "doc_id", "text", n=8).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, first))
     # full clear (no df) drains everything
     dd.clear_shared_cache()
-    assert len(list(dd._SHARED_MATERIALIZED.keys())) == 0
+    assert len(memo._STORE) == 0
 
 
 def test_setsim_suffix_filter_bound_is_lossless():

@@ -143,10 +143,8 @@ def test_perceptron_filter_confusion_mass_and_memo(spark, tmp_path):
     docs = _mk_docs(spark, seed=5, n=70)
     sf = str(tmp_path)
     docs.coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    from duckdb_cluster_hash_spark.plans.docs import (
-        _PERC_MEMO,
-        perceptron_trajectory_shared,
-    )
+    from duckdb_cluster_hash_spark import memo
+    from duckdb_cluster_hash_spark.plans.docs import perceptron_trajectory_shared
     from duckdb_cluster_hash_spark.sources.tables import load_table
 
     corpus = load_table(spark, sf, "documents")
@@ -163,7 +161,7 @@ def test_perceptron_filter_confusion_mass_and_memo(spark, tmp_path):
     # the trainer memo is shared: same corpus frame -> same object back
     t1 = perceptron_trajectory_shared(corpus, 8)
     t2 = perceptron_trajectory_shared(corpus, 8)
-    assert t1 is t2 and corpus in _PERC_MEMO
+    assert t1 is t2 and ("perceptron", 8) in memo._STORE[corpus]
     # scoring with the final weights reproduces n_pred_pos
     w = list(t1[-1][3:])
     feats = [
@@ -236,11 +234,9 @@ def test_perceptron_memo_cleared_by_shared_cache_hook(spark, tmp_path):
     """Timing harnesses reset session memos through the ONE hook
     (operators.dedup.clear_shared_cache); the trajectory memo must obey
     it, or bench repeats / scale-probe passes measure memo hits."""
+    from duckdb_cluster_hash_spark import memo
     from duckdb_cluster_hash_spark.operators.dedup import clear_shared_cache
-    from duckdb_cluster_hash_spark.plans.docs import (
-        _PERC_MEMO,
-        perceptron_trajectory_shared,
-    )
+    from duckdb_cluster_hash_spark.plans.docs import perceptron_trajectory_shared
     from duckdb_cluster_hash_spark.sources.tables import load_table
 
     sf = str(tmp_path)
@@ -249,9 +245,9 @@ def test_perceptron_memo_cleared_by_shared_cache_hook(spark, tmp_path):
     )
     corpus = load_table(spark, sf, "documents")
     t1 = perceptron_trajectory_shared(corpus, 3)
-    assert corpus in _PERC_MEMO
+    assert ("perceptron", 3) in memo._STORE[corpus]
     assert clear_shared_cache() >= 1
-    assert corpus not in _PERC_MEMO
+    assert corpus not in memo._STORE
     t2 = perceptron_trajectory_shared(corpus, 3)
     assert t1 == t2 and t1 is not t2  # retrained, same trajectory
 
