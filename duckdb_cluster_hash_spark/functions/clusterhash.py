@@ -136,10 +136,12 @@ def cluster_node_pudf(n_nodes: int = DEFAULT_NODES) -> F.pandas_udf:
     return cluster_node
 
 
-# Default hot-path implementation: the Arrow-batched UDF benchmarked ~7x
-# faster than the interpreted higher-order-function fold at sf0.1 (the fold
-# pays per-byte element_at dispatch; the UDF is one numpy pass per byte
-# position).  Keep the native expression for Python-less contexts.
+# Default hot-path implementation: the Arrow-batched UDF, measured 3.7x
+# the interpreted higher-order-function fold's rows/s (0.90 vs 0.24
+# Mrows/s, local[4], 2M keys with 50k distinct hash tags, best of 3; a
+# one-off measurement, not yet a committed artifact).  The fold pays
+# per-byte element_at dispatch; the UDF is one numpy pass per byte
+# position.  Keep the native expression for Python-less contexts.
 _DEFAULT_SLOT_UDF = None
 
 

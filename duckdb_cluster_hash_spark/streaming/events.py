@@ -244,6 +244,12 @@ def staged_stream_shuffle_partitions(
     data instead of with a constant.  Partition count never changes
     which rows a stateful operator sees for a key (hash partitioning by
     key is total), so results are unchanged at any width.
+
+    Caveat: Spark pins ``numShufflePartitions`` from an existing
+    checkpoint's offset log, so a query RESUMED from a checkpoint keeps
+    the width it started with, whatever this returns now.  Only a query
+    that wipes its checkpoint first (as ``events_streaming_routed_sink``
+    does) is guaranteed the derived width.
     """
     total = 0
     for root, _dirs, files in os.walk(stage_dir):

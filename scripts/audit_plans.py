@@ -23,7 +23,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from duckdb_cluster_hash_spark.session import start_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF", "/root/testdata/sf0.001")
 
@@ -320,15 +320,7 @@ WAIVERS: dict[str, str] = {
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_session()
 
     from duckdb_cluster_hash_spark.plans.catalog import QUERIES
 

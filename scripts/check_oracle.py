@@ -12,18 +12,20 @@ normalized).  Usage::
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
 
 import duckdb
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
+from duckdb_cluster_hash_spark.session import start_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 TABLES = (
@@ -100,27 +102,30 @@ def type_problems(scols, stypes, ocols, otypes):
     return diffs
 
 
+def write_stamp(path, sf_dir, passed, failed):
+    """Write the full-run stamp, leaving the file alone (``utc`` included)
+    when its counts already match, so a repeat run leaves the tree clean.
+    Returns True when the file was (re)written."""
+    stamp = {"sf_dir": sf_dir, "passed": passed, "failed": failed,
+             "total": passed + failed}
+    try:
+        with open(path) as fh:
+            old = json.load(fh)
+        if {k: old.get(k) for k in stamp} == stamp:
+            return False
+    except (OSError, ValueError):
+        pass
+    stamp["utc"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+    try:
+        with open(path, "w") as fh:
+            json.dump(stamp, fh, indent=2)
+    except OSError:
+        return False
+    return True
+
+
 def main(names):
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-        )
-        .appName("check-oracle")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # Same heap as bench.py: the default driver heap OOMs on the
-        # 100M-group link-prediction aggregate once a long sweep has
-        # accumulated checkpoint blocks (observed killing two full
-        # sf0.1 sweeps at query ~70).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_session()
     con = duckdb.connect()
     # Per-process spill dir: DuckDB defaults to cwd-relative .tmp/, and
     # two concurrent check_oracle processes (e.g. an sf0.1 sweep next to
@@ -218,25 +223,11 @@ def main(names):
     # which catches tie/overflow divergences the sf0.01 gate can't —
     # is auditable instead of a claim in round notes.
     if not names:
-        import json
-
         sf_tag = os.path.basename(SF_DIR.rstrip("/")).replace(".", "")
-        stamp = {
-            "sf_dir": SF_DIR,
-            "passed": len(selected) - failures,
-            "failed": failures,
-            "total": len(selected),
-            "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            f"ORACLE_{sf_tag.upper()}.json",
+        write_stamp(
+            os.path.join(os.path.dirname(HERE), f"ORACLE_{sf_tag.upper()}.json"),
+            SF_DIR, len(selected) - failures, failures,
         )
-        try:
-            with open(path, "w") as fh:
-                json.dump(stamp, fh, indent=2)
-        except OSError:
-            pass
     return 1 if failures else 0
 
 

@@ -31,22 +31,7 @@ import test_fuzz_oracle as tf  # noqa: E402
 from duckdb_cluster_hash_spark.operators import dedup  # noqa: E402
 from duckdb_cluster_hash_spark.operators.ranking import release_rank_pins  # noqa: E402
 from duckdb_cluster_hash_spark.plans.catalog import ORACLES, QUERIES  # noqa: E402
-
-
-def _spark():
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("fuzz-soak")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+from duckdb_cluster_hash_spark.session import start_session  # noqa: E402
 
 
 def _run_family(spark, sf_dir, con, names, seed, label):
@@ -110,8 +95,7 @@ def _stamp_soak_md(
 
 
 def main(n_seeds: int, start: int = 100) -> int:
-    spark = _spark()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_session()
     failures: list[tuple[int, str, str]] = []
     per_seed: list[str] = []
     for seed in range(start, start + n_seeds):

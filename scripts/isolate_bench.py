@@ -9,13 +9,13 @@ the thing you are changing).
 Usage: python scripts/isolate_bench.py q1 q2 ... [--repeats N] [--out F]
        python scripts/isolate_bench.py --all --repeats N
 
-Session config matches bench.py exactly (same master, shuffle
-partitions, AQE, FAIR) so isolated numbers are comparable to the
-bench's contended walls modulo contention.  Memoized session state is
-NOT cleared between repeats: run 1 of a memoizing query pays its memo
-build (the bench's per-run cost for non-prestaged queries) and later
-runs are the steady state (the bench's cost for prestaged queries).
-Report whichever matches the claim being made.
+The session is bench.py's (both call ``start_session()``), so isolated
+numbers are comparable to the bench's contended walls modulo contention.
+Memoized session state is NOT cleared between repeats: run 1 of a
+memoizing query pays its memo build (the bench's per-run cost for
+non-prestaged queries) and later runs are the steady state (the bench's
+cost for prestaged queries).  Report whichever matches the claim being
+made.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from duckdb_cluster_hash_spark.session import start_session
 
 
 def main() -> int:
@@ -62,23 +62,7 @@ def main() -> int:
     probe_ms_pre = _bench._cpu_probe_ms()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("duckdb_cluster_hash_spark-isolate")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(max(int(cpus) if cpus.isdigit() else 32, 8)),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_session()
 
     from duckdb_cluster_hash_spark.plans.catalog import QUERIES
 

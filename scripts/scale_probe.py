@@ -248,26 +248,10 @@ def main() -> int:
 
     load1, waited, noisy = bench.wait_for_calm()
 
-    from pyspark.sql import SparkSession
+    from duckdb_cluster_hash_spark.session import host_cpus, start_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-probe")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(max(int(cpus) if cpus.isdigit() else 32, 8)),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_session()
+    cpus = host_cpus()
 
     from duckdb_cluster_hash_spark.operators.dedup import clear_shared_cache
     from duckdb_cluster_hash_spark.operators.ranking import release_rank_pins

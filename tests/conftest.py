@@ -1,10 +1,10 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
-from pyspark.sql import SparkSession
+
+from duckdb_cluster_hash_spark.session import start_session
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_MEDIUM = os.environ.get("SPARK_GRAFT_SF_MEDIUM", "/root/testdata/sf0.01")
@@ -12,24 +12,12 @@ SF_MEDIUM = os.environ.get("SPARK_GRAFT_SF_MEDIUM", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    session = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("duckdb_cluster_hash_spark-tests")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
-        .getOrCreate()
-    )
-    yield session
+    return start_session()
 
 
 @pytest.fixture(scope="module", autouse=True)
 def _release_engine_caches():
-    """Per-module cache hygiene for the shared 8g test JVM: the dedup
+    """Per-module cache hygiene for the shared test JVM: the dedup
     family memo (localCheckpoint blocks) and the ranking pins
     (persist-backed) both exist to share work WITHIN a family/module;
     letting them accumulate across the whole 630-test suite pushed the
