@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
-    README.md:115-120 shape: shard histogram of customer keys through the
-    native-Column cluster_node (scan -> projection -> shuffle agg -> sort).
+    README.md:115-120 shape: shard histogram of customer keys through
+    cluster_node_col (scan -> Arrow slot UDF -> projection -> shuffle agg
+    -> sort).
     """
     from duckdb_cluster_hash_spark.plans.catalog import QUERIES
 

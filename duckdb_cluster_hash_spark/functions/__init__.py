@@ -2,8 +2,5 @@ from duckdb_cluster_hash_spark.functions.clusterhash import (  # noqa: F401
     cluster_slot_col,
     cluster_node_col,
     node_of_slot_col,
-    effective_key_col,
-    cluster_slot_pudf,
-    cluster_node_pudf,
     register_all,
 )

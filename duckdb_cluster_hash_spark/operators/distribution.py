@@ -15,8 +15,9 @@ from pyspark.sql.window import Window
 
 from duckdb_cluster_hash_spark.core import DEFAULT_NODES
 from duckdb_cluster_hash_spark.functions.clusterhash import (
+    cluster_node_col,
+    cluster_slot_col,
     node_of_slot_col,
-    slot_udf_col,
 )
 
 __all__ = [
@@ -39,7 +40,7 @@ def analyze_distribution(
     6-1024-row aggregate is trivial.
     """
     agg = (
-        df.select(node_of_slot_col(slot_udf_col(key_col), n_nodes).alias("node_id"))
+        df.select(cluster_node_col(key_col, n_nodes).alias("node_id"))
         .groupBy("node_id")
         .agg(F.count("*").alias("key_count"))
     )
@@ -61,7 +62,7 @@ def hot_slots(df: DataFrame, key_col: str, k: int = 10) -> DataFrame:
     each partition after the aggregate.
     """
     return (
-        df.select(slot_udf_col(key_col).alias("slot"))
+        df.select(cluster_slot_col(key_col).alias("slot"))
         .groupBy("slot")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("slot"))
@@ -79,7 +80,7 @@ def repartition_by_slot(
     Redis-cluster placement inside the Spark job.  Downstream joins or
     stateful ops keyed by slot then run shuffle-free.
     """
-    keyed = df.withColumn("slot", slot_udf_col(key_col)).withColumn(
+    keyed = df.withColumn("slot", cluster_slot_col(key_col)).withColumn(
         "node_id", node_of_slot_col(F.col("slot"), DEFAULT_NODES)
     )
     if num_partitions:
@@ -101,7 +102,5 @@ def write_partitioned_by_node(
     directory follow the upstream partitioning (repartition first to
     bound small files at scale).
     """
-    keyed = df.withColumn(
-        "node_id", node_of_slot_col(slot_udf_col(key_col), n_nodes)
-    )
+    keyed = df.withColumn("node_id", cluster_node_col(key_col, n_nodes))
     keyed.write.format(format).mode("overwrite").partitionBy("node_id").save(path)

@@ -26,15 +26,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_cluster_hash_spark.functions.clusterhash import (
-    cluster_node_col,
-    cluster_slot_col,
-    node_of_slot_col,
-    node_udf_col,
-    register_all,
-    slot_udf_col,
-)
-from duckdb_cluster_hash_spark.oracle import node_of_slot_sql, node_sql, slot_sql
 from duckdb_cluster_hash_spark.sources.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

@@ -9,11 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark.functions.clusterhash import (
+    cluster_node_col,
     cluster_slot_col,
     node_of_slot_col,
-    node_udf_col,
     register_all,
-    slot_udf_col,
 )
 from duckdb_cluster_hash_spark.oracle import node_of_slot_sql, node_sql, slot_sql
 from duckdb_cluster_hash_spark.plans._registry import _t, query
@@ -41,7 +40,7 @@ def _values_clause(keys: list[str]) -> str:
     ),
 )
 def cluster_scalar_goldens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Golden key corpus through the native Column implementation (Tier A)."""
+    """Golden key corpus through the slot kernel (Tier A)."""
     df = spark.createDataFrame([(k,) for k in _GOLDEN_KEYS], "key string")
     slotted = df.select("key", cluster_slot_col("key").alias("slot"))
     return slotted.select(
@@ -63,7 +62,7 @@ def cluster_node_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship README query (README.md:115-120): shard histogram of keys."""
     return (
         _t(spark, sf_dir, "customer")
-        .select(node_udf_col("c_name").alias("node_id"))
+        .select(cluster_node_col("c_name").alias("node_id"))
         .groupBy("node_id")
         .agg(F.count("*").alias("key_count"))
         .orderBy("node_id")
@@ -129,7 +128,7 @@ def cluster_user_keys_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("user:"), F.col("id").cast("string")).alias("key")
     )
     return (
-        keys.select(node_udf_col("key", 3).alias("node_id"))
+        keys.select(cluster_node_col("key", 3).alias("node_id"))
         .groupBy("node_id")
         .agg(F.count("*").alias("key_count"))
         .orderBy("node_id")
@@ -219,8 +218,8 @@ def cluster_slot_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_name").alias("key"),
-        slot_udf_col("c_name").alias("slot"),
-        node_udf_col("c_name").alias("node_id"),
+        cluster_slot_col("c_name").alias("slot"),
+        cluster_node_col("c_name").alias("node_id"),
     )
 
 
@@ -241,7 +240,7 @@ def cluster_hashtag_colocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-tags co-locate a customer's orders on one slot (README.md:90-102)."""
     keyed = _t(spark, sf_dir, "orders").select(
         "o_custkey",
-        slot_udf_col(
+        cluster_slot_col(
             F.concat(
                 F.lit("{cust:"),
                 F.col("o_custkey").cast("string"),
@@ -269,7 +268,7 @@ _ITEM_KEY_SQL = "'item:' || l_orderkey::VARCHAR || ':' || l_linenumber::VARCHAR"
 def cluster_hot_slots_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-slot top-k (C2): ORDER BY+LIMIT -> TakeOrderedAndProject."""
     keyed = _t(spark, sf_dir, "lineitem").select(
-        slot_udf_col(
+        cluster_slot_col(
             F.concat(
                 F.lit("item:"),
                 F.col("l_orderkey").cast("string"),
@@ -306,7 +305,7 @@ def cluster_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     keyed = _t(spark, sf_dir, "orders").select(
-        node_udf_col(
+        cluster_node_col(
             F.concat(F.lit("order:"), F.col("o_orderkey").cast("string"))
         ).alias("node_id")
     )
@@ -459,25 +458,25 @@ def cluster_resharding_key_impact(
     prices it in rows, which is what the operator migrating data pays.
 
     Scale: both node mappings are native integer Column expressions over
-    one scan (no join with the slot table — the closed form IS the
-    mapping); movers filter map-side before the tiny (from, to) rollup.
+    one slot evaluation and one scan (no join with the slot table — the
+    closed form IS the mapping).  Keys that stay are counted out inside
+    the tiny (from, to) rollup: a filter on the node columns would be
+    pushed under the slot UDF and run it a second time.
     """
-    cust = _t(spark, sf_dir, "customer").select("c_name")
-    slot = cluster_slot_col("c_name")
-    mapped = cust.select(
-        node_of_slot_col(slot, 6).alias("node_from"),
-        node_of_slot_col(slot, 8).alias("node_to"),
+    slotted = _t(spark, sf_dir, "customer").select(
+        cluster_slot_col("c_name").alias("slot")
+    )
+    mapped = slotted.select(
+        node_of_slot_col(F.col("slot"), 6).alias("node_from"),
+        node_of_slot_col(F.col("slot"), 8).alias("node_to"),
     )
     total = int(mapped.count())
+    movers = F.count(F.when(F.col("node_from") != F.col("node_to"), 1))
     return (
-        mapped.where(F.col("node_from") != F.col("node_to"))
-        .groupBy("node_from", "node_to")
-        .agg(
-            F.count("*").cast("bigint").alias("n_keys"),
-            F.expr(f"(count(*) * 1000) div {total}").alias(
-                "permille_of_corpus"
-            ),
-        )
+        mapped.groupBy("node_from", "node_to")
+        .agg(movers.alias("n_keys"))
+        .where(F.col("n_keys") > 0)
+        .withColumn("permille_of_corpus", F.expr(f"(n_keys * 1000) div {total}"))
         .orderBy("node_from", "node_to")
     )
 
@@ -662,7 +661,7 @@ def cluster_rendezvous_placement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"d{n}")
             for n in range(1, _HRW_N + 1)
         ],
-        node_udf_col(key).alias("slot_node"),
+        cluster_node_col(key).alias("slot_node"),
     )
     m = F.greatest(*[F.col(f"d{n}") for n in range(1, _HRW_N + 1)])
     hrw = F.when(F.col("d1") == m, 1)

@@ -8,7 +8,7 @@ window, and rotation stay in catalog.py.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from duckdb_cluster_hash_spark.functions.clusterhash import node_udf_col
+from duckdb_cluster_hash_spark.functions.clusterhash import cluster_node_col
 from duckdb_cluster_hash_spark.oracle import node_sql
 from duckdb_cluster_hash_spark.streaming import events as _ev
 from duckdb_cluster_hash_spark.oracle import node_sql as _node_sql
@@ -164,15 +164,11 @@ def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_node_routing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard routing for the event stream (C7): hash-tagged user keys ->
-    per-node event counts (the batch equivalent of route_events_to_nodes).
-    Uses the Arrow-vectorized kernel — the batch hot path (3.7x the
-    interpreted fold's rows/s in a one-off measurement, see
-    functions/clusterhash.py); the native Column variant stays graded via
-    cluster_scalar_goldens/cluster_hashtag_colocation and is what the
-    Python-less streaming routing runs."""
+    per-node event counts (the batch equivalent of route_events_to_nodes,
+    which runs the same Arrow-batched slot kernel inside its stream)."""
     ev = _t(spark, sf_dir, "events")
     keyed = ev.select(
-        node_udf_col(
+        cluster_node_col(
             F.concat(F.lit("{user:"), F.col("user_id").cast("string"), F.lit("}"))
         ).alias("node_id"),
         "value",

@@ -600,7 +600,7 @@ def events_streaming_routed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's data-placement purpose executed by the STREAMING
     engine end-to-end (C1 x C7 — previously pytest-only): events stream
     through ``route_events_to_nodes`` — hash-tagged ``{user:<id>}`` keys,
-    NATIVE cluster_node expression (no Python worker in the stream),
+    ``cluster_node_col`` (the Arrow-batched slot kernel in the stream),
     ``foreachBatch`` writing parquet partitioned by (batch_id, node_id)
     with dynamic partition overwrite (idempotent replay) — then the sink
     DIRECTORY is read back and rolled up per shard.  Equality with the

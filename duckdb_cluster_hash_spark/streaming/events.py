@@ -11,8 +11,8 @@ streaming semantics, and how the tests assert stream == batch.
 Scale notes: watermarks bound state (late data beyond the delay is
 dropped); ``foreachBatch`` + ``partitionBy(node_id)`` gives exactly-once
 per-shard output directories with state-store-free routing;
-``cluster_node`` uses the *native* Column implementation so the streaming
-plan needs no Python workers.
+``cluster_node`` is the Arrow-batched slot kernel plus JVM node arithmetic,
+a stateless scalar pandas UDF that Structured Streaming runs per batch.
 
 FIXED-COST FLOOR (measured round 8, sf0.1, local[32], sequential): the 8
 TRUE streaming catalog queries sum 27.4s cold / 16.9s warm.  The 10.5s
@@ -561,8 +561,8 @@ def route_events_to_nodes(
     """Stream sink: route each event to its owning shard directory.
 
     Key = ``{user:<id>}`` (hash-tagged, so a user's events co-locate);
-    node via the native cluster_node expression (no Python worker in the
-    stream).  foreachBatch writes parquet partitioned by (batch_id,
+    node via ``cluster_node_col`` (one Arrow-batched slot evaluation per
+    micro-batch).  foreachBatch writes parquet partitioned by (batch_id,
     node_id) with DYNAMIC partition overwrite: a replayed micro-batch
     overwrites its own batch_id partitions instead of appending
     duplicates, making the sink idempotent (exactly-once output on

@@ -1,6 +1,6 @@
-"""Spark-surface parity: pandas-UDF and native-Column implementations must
-be bit-exact against the pure-Python core and the FIXTURES.md goldens,
-NULL-propagating, int32-typed, and registered in the SQL catalog
+"""Spark-surface parity: the slot UDF behind the Column API and the SQL
+catalog must be bit-exact against the pure-Python core and the FIXTURES.md
+goldens, NULL-propagating, int32-typed, and registered in the SQL catalog
 (reference: clusterhash_extension.cpp:93-124)."""
 
 from __future__ import annotations
@@ -56,7 +56,7 @@ def test_registered_udfs_goldens(spark, keys_df):
     keys_df.createOrReplaceTempView("golden_keys")
     out = spark.sql(
         """SELECT key, cluster_slot(key) AS slot, cluster_node(key) AS n6,
-                  cluster_node_n(key, 3) AS n3
+                  cluster_node(key, 3) AS n3
            FROM golden_keys"""
     )
     assert isinstance(out.schema["slot"].dataType, IntegerType)
@@ -66,19 +66,31 @@ def test_registered_udfs_goldens(spark, keys_df):
     assert got[None] == (None, None, None)
 
 
-def test_udf_vs_native_on_table(spark, sf_small):
-    """Both implementations agree on every key-ish column of the corpus."""
+def test_sql_cluster_node_invalid_n_is_null(spark):
+    """A shard count that is NULL or below 1 yields NULL, not shard 0; the
+    old two-argument helper name is gone from the catalog."""
     register_all(spark)
-    cust = spark.read.parquet(f"{sf_small}/customer.parquet")
-    mismatch = (
-        cust.select(
-            F.expr("cluster_slot(c_name)").alias("udf_slot"),
-            cluster_slot_col("c_name").alias("nat_slot"),
-        )
-        .where("udf_slot <> nat_slot")
-        .count()
+    row = spark.sql(
+        """SELECT cluster_node('user:1000', 0) AS z,
+                  cluster_node('user:1000', -1) AS neg,
+                  cluster_node('user:1000', CAST(NULL AS INT)) AS nul"""
+    ).head()
+    assert (row["z"], row["neg"], row["nul"]) == (None, None, None)
+    with pytest.raises(AnalysisException):
+        spark.sql("SELECT cluster_node_n('user:1000', 3)").collect()
+
+
+# Hash-tag edge keys GOLDENS lacks: an empty first tag, two tags, a tag
+# mid-key, a non-ASCII tag, and keys of 1 KB and more (ASCII and 2-byte).
+EDGE_KEYS = ["{}{a}", "{a}{b}", "a{b}c", "{ключ}:x", "k" * 1024, "é" * 700]
+
+
+def test_udf_matches_core_on_table(spark, sf_small):
+    """The slot UDF is bit-exact against the pure-Python core on customer
+    names, {cust:X}:order:Y keys and the hash-tag edge keys."""
+    cust = spark.read.parquet(f"{sf_small}/customer.parquet").select(
+        F.col("c_name").alias("key")
     )
-    assert mismatch == 0
     orders = spark.read.parquet(f"{sf_small}/orders.parquet").select(
         F.concat(
             F.lit("{cust:"),
@@ -87,15 +99,26 @@ def test_udf_vs_native_on_table(spark, sf_small):
             F.col("o_orderkey").cast("string"),
         ).alias("key")
     )
-    mismatch = (
-        orders.select(
-            F.expr("cluster_node(key)").alias("u"),
-            cluster_node_col("key").alias("n"),
+    edges = spark.createDataFrame([(k,) for k in EDGE_KEYS], "key string")
+    rows = (
+        cust.unionByName(orders)
+        .unionByName(edges)
+        .select(
+            "key",
+            cluster_slot_col("key").alias("slot"),
+            cluster_node_col("key").alias("n6"),
+            cluster_node_col("key", 3).alias("n3"),
         )
-        .where("u <> n")
-        .count()
+        .collect()
     )
-    assert mismatch == 0
+    bad = [
+        r["key"]
+        for r in rows
+        if (r["slot"], r["n6"], r["n3"])
+        != (get_slot(r["key"]), get_node(r["key"]), get_node(r["key"], 3))
+    ]
+    assert bad == []
+    assert {r["key"] for r in rows} >= set(EDGE_KEYS)
 
 
 def test_hashtag_colocation_on_orders(spark, sf_small):
