@@ -108,7 +108,11 @@ def node_of_slot_col(slot, n_nodes=DEFAULT_NODES) -> Column:
         raise ValueError(f"n_nodes must be >= 1, got {n_nodes}")
     slot = _as_col(slot)
     n = n_nodes if isinstance(n_nodes, Column) else F.lit(int(n_nodes))
-    numer = n * (F.lit(2) * slot + F.lit(1)) + F.lit(2 * TOTAL_SLOTS - 1)
+    # BIGINT before the multiply, as SQL cluster_node: n * (2*slot + 1)
+    # overflows INT (ANSI error) for n above ~65k
+    numer = n.cast("bigint") * (F.lit(2) * slot + F.lit(1)) + F.lit(
+        2 * TOTAL_SLOTS - 1
+    )
     return F.floor(numer / F.lit(2 * TOTAL_SLOTS)).cast("int")
 
 

@@ -23,55 +23,28 @@ oracle-checkable.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_cluster_hash_spark import memo as _memo
 
-# Where the exact-substring family stages its corpus-sized position
-# tables.  None (default) = persist() in executor memory/disk — right
-# for single-node and bench scale.  A path (or the
-# SPARK_GRAFT_SUBSTR_STAGE env var) = write each intermediate to a temp
-# parquet table under it and read it back — the corpus-scale option the
-# design doc calls for: position tables at 100 TB outgrow executor
-# storage, and a staged parquet table is re-scannable by every consumer
-# stage at parquet cost, survives executor loss, and is deleted the
-# moment the (tiny) run table materializes.  Measured at the x10 scale
-# notch in SCALE.md (parity footnote).
-POSITION_STAGE_DIR: str | None = os.environ.get("SPARK_GRAFT_SUBSTR_STAGE") or None
-
-# Edge-count cutover below which connected components close on the
-# driver (bounded collect + union-find) instead of iterating on the
-# cluster — see neardup_components.  200k edges ≈ a few MB of int
-# pairs; the distributed path takes over beyond it.
-SMALL_GRAPH_EDGE_CAP = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_CAP", "200000")
-)
+# Edge count below which neardup_components closes the graph on the
+# driver (bounded collect + union-find) instead of running pointer-
+# jumping rounds on the cluster.  200k edges is a few MB of id pairs.
+# At sf0.1 (254 edges, 473 nodes, 231 components; local[4], warm
+# median of 3) the driver closure took 0.35-0.53 s over 5 jobs and
+# pointer jumping 0.91-1.38 s over 24-26 jobs, with equal output
+# (ROADMAP direction 4).
+SMALL_GRAPH_EDGE_CAP = 200_000
 
 
-def _materialize_positions(df: DataFrame, tag: str):
-    """Materialize a corpus-sized intermediate for multi-consumer reuse;
-    returns (frame, release).  Default: CacheManager persist()
-    (MEMORY_AND_DISK) — unlike localCheckpoint, ``release()`` then
-    genuinely frees the blocks (Dataset.unpersist only uncaches
-    CacheManager-registered plans), and a post-release consumer merely
-    recomputes the deterministic lineage.  With POSITION_STAGE_DIR set:
-    a temp parquet table, released by deleting the directory."""
-    if POSITION_STAGE_DIR:
-        path = os.path.join(
-            POSITION_STAGE_DIR, f"substr_{tag}_{uuid.uuid4().hex}"
-        )
-        df.write.mode("overwrite").parquet(path)
-        staged = df.sparkSession.read.parquet(path)
-
-        def release() -> None:
-            shutil.rmtree(path, ignore_errors=True)
-
-        return staged, release
+def _materialize_positions(df: DataFrame):
+    """Persist a corpus-sized intermediate for multi-consumer reuse;
+    returns (frame, release).  CacheManager persist() (MEMORY_AND_DISK)
+    — unlike localCheckpoint, ``release()`` then genuinely frees the
+    blocks (Dataset.unpersist only uncaches CacheManager-registered
+    plans), and a post-release consumer, or one that lost a block with
+    its executor, merely recomputes the deterministic lineage."""
     from pyspark import StorageLevel
 
     persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -83,6 +56,7 @@ def _materialize_positions(df: DataFrame, tag: str):
             pass
 
     return persisted, release
+
 
 __all__ = [
     "exact_dedup",
@@ -96,7 +70,6 @@ __all__ = [
     "minhash_neardup_pairs",
     "neardup_components",
     "neardup_components_shared",
-    "neardup_components_pathjump",
     "simhash64",
     "simhash64_project",
     "simhash64_shared",
@@ -846,9 +819,7 @@ def exact_substring_span_pairs(
     position table is materialized once (it feeds the frequency gate
     AND the gated join back — the distributed analog of materializing
     the suffix array, which Lee et al. also pay): CacheManager
-    persist() by default (releasable, recompute-safe), or a temp
-    parquet table under ``POSITION_STAGE_DIR`` — the corpus-scale
-    staging path, measured for parity in SCALE.md.  The
+    persist(), releasable and recompute-safe.  The
     digest-frequency gate (>= 2 docs, <= ``cap`` total occurrences) is
     one keyed aggregation and bounds the per-digest join fan-out at
     cap^2, the same stop-gram guard the LSH path uses (a k-char gram
@@ -885,13 +856,13 @@ def _substring_match_runs(
     The finished run table is memoized per (corpus, params) via
     ``_shared_checkpoint`` — the pair view and the per-doc bill both
     start from it, so one engine session pays the position-anchor scan
-    once.  The corpus-sized position intermediates are persist()'ed
-    (or parquet-staged, see ``POSITION_STAGE_DIR``) and released by the
-    builder's cleanup immediately after the single eager run-table
-    checkpoint completes: the run table is tiny (one row per maximal
-    shared span) while the position table is corpus-sized, and
-    persist()-backed blocks — unlike localCheckpoint's — are actually
-    freed by unpersist, with any later recomputation deterministic.
+    once.  The corpus-sized position intermediates are persist()'ed and
+    released by the builder's cleanup immediately after the single
+    eager run-table checkpoint completes: the run table is tiny (one
+    row per maximal shared span) while the position table is
+    corpus-sized, and persist()-backed blocks — unlike
+    localCheckpoint's — are actually freed by unpersist, with any later
+    recomputation deterministic.
     """
 
     def build():
@@ -909,8 +880,7 @@ def _substring_match_runs(
             )
             .select(
                 "doc_id", F.col("g.p").alias("p"), F.col("g.dig").alias("dig")
-            ),
-            "occ",
+            )
         )
         keep = (
             occ.groupBy("dig")
@@ -921,7 +891,7 @@ def _substring_match_runs(
             .where((F.col("dd") >= 2) & (F.col("c") <= cap))
             .select("dig")
         )
-        kept, release_kept = _materialize_positions(occ.join(keep, "dig"), "kept")
+        kept, release_kept = _materialize_positions(occ.join(keep, "dig"))
         a = kept.select(
             "dig", F.col("doc_id").alias("doc_a"), F.col("p").alias("pa")
         )
@@ -1131,39 +1101,42 @@ def exact_substring_rewrite(
     )
 
 
-def neardup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Connected components over near-dup pairs (doc_a, doc_b).
+def neardup_components(pairs: DataFrame, max_rounds: int = 34) -> DataFrame:
+    """Connected components over near-dup pairs (doc_a, doc_b) — the one
+    closure of a near-dup graph (pairs alone aren't actionable; whole
+    clusters are).  Returns (doc_id, component), typed as ``doc_a``,
+    where component = min doc_id of the cluster; only docs appearing in
+    >= 1 pair are returned (singletons need no dedup decision).  The
+    pairs input is checkpointed up front so its (potentially expensive
+    — MinHash/LSH) lineage runs once.
 
-    Iterative min-label propagation: every node repeatedly adopts the
-    minimum component id among itself and its neighbors until fixpoint —
-    the distributed analogue of union-find used by production dedup
-    pipelines (pairs alone aren't actionable; whole clusters are).  Each
-    iteration is ONE Spark job: the convergence check is a ``changed``
-    flag computed inside the label-update pass, and counting it doubles
-    as the action that materializes the (lazy) localCheckpoint — no
-    separate compare-join job, no double materialization.  The pairs
-    input is checkpointed up front so its (potentially expensive —
-    MinHash/LSH) lineage runs once, not once per direction per iteration.
-    Near-dup graphs are unions of near-cliques, so fixpoint takes
-    ~diameter iterations (2-3 in practice); exceeding ``max_iter`` raises
-    instead of silently returning unconverged (wrong) components.
-    Returns (doc_id, component) where component = min doc_id of the
-    cluster; only docs appearing in >= 1 pair are returned (singletons
-    need no dedup decision).
+    Which branch closes the graph depends only on its edge count:
 
-    ADAPTIVE CUTOVER (the same move AQE makes for broadcast joins): a
-    near-dup EDGE list is orders of magnitude smaller than the corpus
-    (only docs with a >= threshold partner appear), and below
-    ``SMALL_GRAPH_EDGE_CAP`` edges the distributed iteration is pure
-    scheduler overhead — 2 joins x ~3 rounds of sub-second jobs.  Such
-    graphs collect to the driver (bounded by the cap, ~a few MB) and
-    close with union-find; output is bit-identical (component = min
-    reachable id either way).  Above the cap — the true 100 TB case —
-    the distributed label propagation below is the path.
+    - **Fewer than** ``SMALL_GRAPH_EDGE_CAP`` **edges:** collect to the
+      driver (bounded by the cap, a few MB) and close with union-find.
+      A near-dup edge list is orders of magnitude smaller than the
+      corpus, and there distributed rounds are pure scheduler overhead.
+      This branch is also the in-process reference the distributed one
+      is tested against (the DuckDB recursive CTE is the outer one).
+    - **Otherwise:** POINTER JUMPING (path doubling) on the cluster.
+      Each round adopts the minimum label over the neighborhood, then
+      jumps lbl(v) <- lbl(lbl(v)) — the distributed path-halving of
+      union-find (Shiloach & Vishkin 1982; the hash-to-min family of
+      Rastogi et al. 2013 converges the same way).  Plain label
+      propagation needs ~diameter rounds of full shuffles, so a chain
+      of transitively-similar documents (template drift across a crawl)
+      would make the diameter, not the data, the wall-clock; the jump
+      doubles the distance a label travels per round, so a 64-hop chain
+      closes in <= 8 rounds instead of ~63.  Each round is ONE job: the
+      ``changed`` flag is computed inside the label update, and counting
+      it materializes the (lazy) localCheckpoint.
+
+    Both branches give component = min reachable id.  Exceeding
+    ``max_rounds`` raises instead of silently returning unconverged
+    (wrong) components; the default allows a diameter of 2^34.
     """
     pairs_cp = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    if pairs_cp.count() <= SMALL_GRAPH_EDGE_CAP:
-        rows = pairs_cp.collect()
+    if pairs_cp.count() < SMALL_GRAPH_EDGE_CAP:
         parent: dict = {}
 
         def find(x):
@@ -1174,7 +1147,7 @@ def neardup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
                 parent[x], x = r, parent[x]
             return r
 
-        for a, b in rows:
+        for a, b in pairs_cp.collect():
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -1198,74 +1171,7 @@ def neardup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         .select("node", F.col("node").alias("component"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("component").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("ncomp"), F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce(F.col("ncomp"), F.col("component"))
-                    < F.col("component")
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # the count materializes the checkpoint AND reads the flag: 1 job
-        changed = new_labels.where(F.col("changed")).count()
-        labels = new_labels.drop("changed")
-        if changed == 0:
-            return labels.select(F.col("node").alias("doc_id"), "component")
-    raise RuntimeError(
-        f"neardup_components did not reach fixpoint in {max_iter} iterations; "
-        "components would be wrong — raise max_iter (graph diameter exceeds it)"
-    )
-
-
-def neardup_components_pathjump(
-    pairs: DataFrame, max_rounds: int = 34
-) -> tuple[DataFrame, int]:
-    """Connected components with POINTER JUMPING (path doubling): each
-    round first adopts the minimum label over the neighborhood (the
-    label-prop step), then jumps lbl(v) <- lbl(lbl(v)) — the distributed
-    path-halving of union-find (Shiloach & Vishkin 1982; the hash-to-min
-    family of Rastogi et al. 2013 converges the same way).
-
-    Why it exists next to :func:`neardup_components`: plain label-prop
-    needs ~diameter rounds, and every round is a full shuffle — on a
-    100 TB corpus a single chain of transitively-similar documents
-    (template drift across a crawl) makes the diameter, not the data,
-    the wall-clock.  The jump step doubles the distance a label travels
-    per round, so fixpoint takes O(log2(diameter)) rounds: a 64-hop
-    chain converges in ~7 rounds instead of ~63 (pinned by a chain-graph
-    unit test).  Every label is itself a node id present in the labels
-    table (labels start as the node and only ever move to other nodes'
-    ids via min), so the jump self-join is total.
-
-    Returns (labels, n_rounds): labels = (doc_id, component) with
-    component = min doc_id of the cluster, bit-identical to
-    :func:`neardup_components`; n_rounds = rounds actually used.
-    Exceeding ``max_rounds`` raises (the default allows a diameter of
-    2^34 — any real graph converges far earlier).
-    """
-    pairs_cp = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    fwd = pairs_cp.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    rev = pairs_cp.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    edges = fwd.union(rev).distinct().localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    for rounds in range(1, max_rounds + 1):
+    for _ in range(max_rounds):
         neighbor_min = (
             edges.join(labels, edges.src == labels.node)
             .groupBy(F.col("dst").alias("node2"))
@@ -1281,40 +1187,33 @@ def neardup_components_pathjump(
             ).alias("_mid"),
         )
         # pointer jump: component <- component's own current component.
-        # Joins against the PRE-STEP labels (already checkpointed) so the
-        # round stays two keyed joins; the jump still doubles the
+        # Every label is itself a node id in the labels table (labels
+        # only ever move to other nodes' ids via min), so the jump join
+        # is total.  It joins the PRE-STEP labels (already checkpointed)
+        # so the round stays two keyed joins; the jump still doubles the
         # distance a label travels because pre-step labels already point
         # strictly downhill.
         jump = labels.select(
             F.col("node").alias("jnode"), F.col("component").alias("jcomp")
         )
+        jumped = F.least(F.col("_mid"), F.coalesce(F.col("jcomp"), F.col("_mid")))
         new_labels = (
             stepped.join(jump, stepped["_mid"] == F.col("jnode"), "left")
             .select(
                 "node",
-                F.least(
-                    F.col("_mid"), F.coalesce(F.col("jcomp"), F.col("_mid"))
-                ).alias("component"),
-                (
-                    F.least(F.col("_mid"), F.coalesce(F.col("jcomp"), F.col("_mid")))
-                    < F.col("_old")
-                ).alias("changed"),
+                jumped.alias("component"),
+                (jumped < F.col("_old")).alias("changed"),
             )
             .localCheckpoint(eager=False)
         )
         # one job: materializes the checkpoint AND reads the change flag
         changed = new_labels.where(F.col("changed")).count()
-        labels_prev = labels
         labels = new_labels.drop("changed")
-        labels_prev.unpersist()
         if changed == 0:
-            return (
-                labels.select(F.col("node").alias("doc_id"), "component"),
-                rounds,
-            )
+            return labels.select(F.col("node").alias("doc_id"), "component")
     raise RuntimeError(
-        f"neardup_components_pathjump did not converge in {max_rounds} "
-        "rounds; components would be wrong — raise max_rounds"
+        f"neardup_components did not converge in {max_rounds} rounds; "
+        "components would be wrong — raise max_rounds"
     )
 
 
@@ -1330,11 +1229,11 @@ def neardup_components_shared(
 ) -> DataFrame:
     """Session-memoized :func:`neardup_components` over the MinHash/LSH
     pair graph — the components table is tiny (docs in clusters only)
-    and deterministic, but the label-propagation closure costs a
-    shuffle round per graph diameter, so consumers that need the SAME
-    clustering (the components census query, the composed curation
-    pipeline's near-dup stage) share one materialization per (corpus,
-    params) instead of each re-running the iteration."""
+    and deterministic, but the pair build and its closure cost several
+    jobs, so consumers that need the SAME clustering (the components
+    query, its census, the composed curation pipeline's near-dup stage)
+    share one materialization per (corpus, params) instead of each
+    re-running them."""
 
     def build() -> DataFrame:
         return neardup_components(

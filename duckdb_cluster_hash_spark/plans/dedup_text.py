@@ -128,11 +128,11 @@ def docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("docs_neardup_components", oracle=_ot.neardup_components_sql(3, 16, 8, 2, 0.2))
 def docs_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering (C4 end-game): MinHash pairs -> connected
-    components via iterative min-label propagation; component id = min
-    doc id (the oracle computes the same closure with a recursive CTE).
-    Session-memoized (neardup_components_shared): the curation pipeline
-    consumes the same clustering, so the closure iteration runs once
-    per (corpus, params), not once per consumer."""
+    components (dedup.neardup_components); component id = min doc id
+    (the oracle computes the same closure with a recursive CTE).
+    Session-memoized (neardup_components_shared): the census and the
+    curation pipeline consume the same clustering, so the closure runs
+    once per (corpus, params), not once per consumer."""
     return _dd.neardup_components_shared(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
         n=3, k=16, bands=8, rows=2, threshold=0.2,
@@ -149,27 +149,18 @@ def docs_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def docs_neardup_component_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster census via POINTER-JUMPING connected components
-    (dedup.neardup_components_pathjump): the same MinHash candidate
-    graph as docs_neardup_components, but closure runs label-prop PLUS
-    a path-doubling jump per round, so fixpoint takes O(log2(diameter))
-    shuffle rounds instead of O(diameter) — the union-find-with-path-
-    halving analogue that keeps chain-shaped near-dup graphs (template
-    drift across a crawl) from making graph diameter the wall-clock.
-    The convergence bound is pinned by a 64-hop chain unit test
-    (7 rounds, not 63).  Output is the per-cluster bill — component
-    (min doc id), member count, exact membership digest (sum of ids) —
-    graded against the oracle's recursive-CTE transitive closure.
-
-    Scale: per round two keyed joins on 32-byte-keyed labels (never
-    text); rounds are log2 of diameter; census is one map-side-combined
+    """Near-dup cluster census: the per-cluster bill — component (min
+    doc id), member count, exact membership digest (sum of ids) — over
+    the session-memoized clustering (dedup.neardup_components_shared,
+    same params) that docs_neardup_components and docs_curation_pipeline
+    read, graded against the same recursive-CTE closure in the oracle.
+    After either of those ran, the census is one map-side-combined
     groupBy over |clusters| groups.
     """
-    pairs = _dd.minhash_neardup_pairs(
+    labels = _dd.neardup_components_shared(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
         n=3, k=16, bands=8, rows=2, threshold=0.2,
     )
-    labels, _rounds = _dd.neardup_components_pathjump(pairs)
     return (
         labels.groupBy("component")
         .agg(

@@ -1123,7 +1123,7 @@ def _pagerank_oracle_sql(iters: int = 3) -> str:
 @query("parts_brand_pagerank", oracle=_pagerank_oracle_sql())
 def parts_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank on the brand co-purchase graph — the second
-    iterative graph algorithm next to label-propagation components, in
+    iterative graph algorithm next to connected components, in
     EXACT truncated-integer arithmetic so every iteration is
     bit-portable: r_{k+1}(b) = 150 + (850 * sum over in-neighbors of
     (r_k(u) div deg(u))) div 1000, three unrolled iterations from
@@ -1205,7 +1205,7 @@ def _triangle_oracle_sql() -> str:
 def parts_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle counting + local clustering coefficient on the
     undirected brand co-purchase graph — third member of the graph
-    family (label-propagation components, PageRank, triangles).
+    family (connected components, PageRank, triangles).
     Edges are canonical ``u < v`` pairs from the basket-bounded
     (order, brand) table; triangles enumerate as e1(a,b) ⋈ e2(b,c) ⋈
     e3(a,c) with a < b < c, so each triangle is produced exactly once.
@@ -1670,7 +1670,7 @@ def _kcore_oracle_sql(rounds: int = 3) -> str:
 def parts_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition of the part co-purchase graph (Seidman
     1983; the third iterative graph operator next to PageRank and
-    label-propagation components): repeatedly strip vertices whose
+    connected components): repeatedly strip vertices whose
     degree falls below k until only the dense core survives.  The
     threshold is SCALE-RELATIVE — k = mean degree + 1, in integer
     arithmetic — so the peel does real work at every sf and on the

@@ -6,7 +6,6 @@ window, and rotation stay in catalog.py.
 """
 
 from __future__ import annotations
-import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark.streaming import events as _ev
@@ -29,17 +28,9 @@ def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
         "spark.sql.shuffle.partitions",
         str(_ev.staged_stream_shuffle_partitions(stage_dir)),
     )
-    # State-store provider override for measurement (r15 VERDICT item 2
-    # asked for an HDFS-backed vs RocksDB comparison): default stays the
-    # HDFS-backed provider — measured faster at replay state sizes of a
-    # few thousand keys, where RocksDB pays native-instance open/compact
-    # overhead per partition per batch with nothing to amortize it.  At
-    # production state sizes (millions of keys per partition) RocksDB is
-    # the right provider; flipping this env var is the only change
-    # needed.
-    provider = os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER")
-    if provider:
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    # Default (HDFS-backed) state store: RocksDB measured slower at
+    # replay state sizes (plans/r15/isolate_r15_rocksdb_rejected.json).
+    # A providerClass set in the SparkContext conf still reaches s2.
     return s2
 
 

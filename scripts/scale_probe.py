@@ -45,7 +45,7 @@ FAMILIES = [
     ("docs_curation_pipeline", "documents", "composed ladder: per-doc gates one corpus pass, memoized LSH components, literal-cut quota rank, artifact write: ~linear in docs"),
     ("docs_quality_perceptron", "documents", "8 map-side-combined scalar aggregates over a cached 6-int projection: ~linear in docs"),
     ("docs_set_similarity_join", "documents", "PPJoin+ prefix-filter join: ~linear in near-dup pair mass"),
-    ("docs_neardup_component_census", "documents", "LSH bands + pointer-jump CC: O(n log d) shuffle rounds"),
+    ("docs_neardup_component_census", "documents", "LSH bands + connected components (driver union-find under the edge cap) + per-cluster groupBy: ~linear in candidate pairs"),
     ("docs_exact_substring_dedup", "documents", "digest-grouped diagonals, cap-bounded fan-out: ~linear in shared-span mass"),
     ("parts_kcore_decomposition", "lineitem", "graded peels over copurchase edges: ~linear in edges per round"),
     ("parts_link_prediction", "lineitem", "wedges capped at 64 md5-neighbors per middle: sum min(d,64)^2"),
@@ -301,39 +301,6 @@ def main() -> int:
         results.append(row)
         print(json.dumps(row), file=sys.stderr)
 
-    # Exact-substring PARQUET-STAGING parity at the largest factor: the
-    # corpus-scale path (POSITION_STAGE_DIR — position tables written to
-    # temp parquet instead of executor persist) must not change the
-    # family's wall-time class.
-    import shutil as _sh
-
-    from duckdb_cluster_hash_spark.operators import dedup as _dedup
-
-    fmax = max(factors)
-    stage_dir = os.path.join(ROOT, ".scaledata", "substr_stage")
-    os.makedirs(stage_dir, exist_ok=True)
-    saved_stage = _dedup.POSITION_STAGE_DIR
-    try:
-        _dedup.POSITION_STAGE_DIR = stage_dir
-        t0 = time.time()
-        QUERIES["docs_exact_substring_dedup"](spark, big_dirs[fmax]).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        t_staged = round(time.time() - t0, 2)
-    finally:
-        _dedup.POSITION_STAGE_DIR = saved_stage
-        clear_shared_cache()
-        _sh.rmtree(stage_dir, ignore_errors=True)
-    t_persist = next(
-        r[f"t_x{fmax}"] for r in results if r["query"] == "docs_exact_substring_dedup"
-    )
-    print(
-        json.dumps(
-            {"substr_staged_parity": {"t_persist": t_persist, "t_staged": t_staged}}
-        ),
-        file=sys.stderr,
-    )
-
     # HIGH-DIVERSITY image notch (r13 verdict item 1): the unsalted
     # generator's rasters repeat with period 1280 in doc_id, so the
     # distinct-signature table STOPS GROWING (~1-2k classes) and the
@@ -546,14 +513,6 @@ def main() -> int:
                 f"| {r['max_bucket']} | {ew} | {em} |"
             )
 
-    lines.append("")
-    lines.append(
-        f"exact-substring staging parity at x{fmax}: persist-path "
-        f"{t_persist}s vs POSITION_STAGE_DIR parquet-staged {t_staged}s — "
-        "the corpus-scale staging option (position tables written to temp "
-        "parquet, survives executor loss, freed by directory delete) stays "
-        "in the same wall-time class."
-    )
     if warm_base:
         cold = {
             r["query"]: r["t_small"]

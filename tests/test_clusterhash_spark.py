@@ -151,18 +151,25 @@ def test_unregistered_function_raises(spark):
 
 
 def test_node_of_slot_col_all_boundaries(spark):
-    df = spark.createDataFrame(
-        [(s,) for s in [0, 2730, 2731, 5460, 5461, 8191, 8192, 10922, 10923, 13652, 13653, 16383]],
-        "slot int",
-    )
-    got = {
-        r["slot"]: r["n"]
-        for r in df.select("slot", node_of_slot_col(F.col("slot"), 6).alias("n")).collect()
-    }
     from duckdb_cluster_hash_spark.core import node_of_slot
 
-    for slot, n in got.items():
-        assert n == node_of_slot(slot, 6)
+    slots = [0, 2730, 2731, 5460, 5461, 8191, 8192, 10922, 10923, 13652, 13653, 16383]
+    # n = 100000 at slot 16383: n * (2*slot + 1) is past INT's range
+    df = spark.createDataFrame(
+        [(s, 6) for s in slots] + [(0, 100000), (16383, 100000)], "slot int, n int"
+    )
+    got = df.select(
+        "slot",
+        "n",
+        node_of_slot_col(F.col("slot"), 6).alias("lit6"),
+        node_of_slot_col(F.col("slot"), 100000).alias("lit_big"),
+        node_of_slot_col(F.col("slot"), F.col("n")).alias("by_col"),
+    ).collect()
+    assert len(got) == len(slots) + 2
+    for r in got:
+        assert r["lit6"] == node_of_slot(r["slot"], 6)
+        assert r["lit_big"] == node_of_slot(r["slot"], 100000)
+        assert r["by_col"] == node_of_slot(r["slot"], r["n"])
 
 
 def test_user_keys_histogram_spark(spark):

@@ -258,31 +258,21 @@ def test_setsim_suffix_filter_bound_is_lossless():
     check()
 
 
-def test_pathjump_components_match_labelprop(spark, docs):
-    pairs = dd.minhash_neardup_pairs(docs, "doc_id", "text", threshold=0.2)
-    want = {r["doc_id"]: r["component"]
-            for r in dd.neardup_components(pairs).collect()}
-    labels, rounds = dd.neardup_components_pathjump(pairs)
-    got = {r["doc_id"]: r["component"] for r in labels.collect()}
-    assert got == want
-    assert rounds >= 1
-
-
-def test_pathjump_chain_converges_logarithmically(spark):
-    """The reason pointer jumping exists: a 64-hop chain needs ~63
-    label-prop rounds but only O(log2(64)) jump rounds.  Pin the bound
-    so a future edit that silently drops the jump step fails here."""
+def test_pathjump_chain_converges_logarithmically(spark, monkeypatch):
+    """Why the distributed branch jumps pointers: a 64-hop chain needs
+    ~63 label-propagation rounds but only O(log2(64)) jump rounds.  With
+    ``max_rounds=8`` a loop that silently drops the jump step raises
+    here instead of converging."""
     n = 64
     pairs = spark.createDataFrame(
-        [(i, i + 1, 0.9) for i in range(n)],
-        "doc_a long, doc_b long, jacc double",
+        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
-    labels, rounds = dd.neardup_components_pathjump(pairs)
-    comps = {r["doc_id"]: r["component"] for r in labels.collect()}
+    monkeypatch.setattr(dd, "SMALL_GRAPH_EDGE_CAP", 0)
+    comps = {
+        r["doc_id"]: r["component"]
+        for r in dd.neardup_components(pairs, max_rounds=8).collect()
+    }
     assert comps == {i: 0 for i in range(n + 1)}
-    # doubling reach: diameter 64 must close in <= ceil(log2(64)) + 2
-    # rounds (one extra for the final no-change fixpoint confirmation)
-    assert rounds <= 8, f"pointer jumping degraded to label-prop: {rounds} rounds"
 
 
 def test_exact_substring_spans_known_lcs(spark):
@@ -368,49 +358,6 @@ def test_substring_dup_bill_interval_union(spark):
     assert rows[5]["dup_chars"] == 0
 
 
-def test_exact_substring_staged_parquet_parity(spark, tmp_path):
-    """POSITION_STAGE_DIR (the corpus-scale staging path: position
-    tables written to temp parquet instead of executor persist) must
-    produce byte-identical spans AND clean its staging directories up
-    as soon as the run table materializes."""
-    import os
-
-    rows = [
-        (1, "qqqqqqqqqq" + "SHAREDBLOCKONE!!" + "rrrrrrrrrr"),
-        (2, "uuuuuuuuuu" + "SHAREDBLOCKONE!!" + "vvvvvvvvvv"),
-        (3, "kkkkkkkkkkkkkkkkkkkk"),
-    ]
-    schema = "doc_id long, text string"
-    base = {
-        (r["doc_a"], r["doc_b"]): (
-            r["longest_span_chars"], r["n_spans"], r["dup_chars_bound"]
-        )
-        for r in dd.exact_substring_span_pairs(
-            spark.createDataFrame(rows, schema), "doc_id", "text",
-            k=10, cap=64, min_span=12,
-        ).collect()
-    }
-    stage = str(tmp_path / "substr_stage")
-    os.makedirs(stage, exist_ok=True)
-    saved = dd.POSITION_STAGE_DIR
-    try:
-        dd.POSITION_STAGE_DIR = stage
-        staged = {
-            (r["doc_a"], r["doc_b"]): (
-                r["longest_span_chars"], r["n_spans"], r["dup_chars_bound"]
-            )
-            for r in dd.exact_substring_span_pairs(
-                spark.createDataFrame(rows, schema), "doc_id", "text",
-                k=10, cap=64, min_span=12,
-            ).collect()
-        }
-    finally:
-        dd.POSITION_STAGE_DIR = saved
-    assert staged == base and (1, 2) in base
-    # builder cleanup deleted both staged position tables
-    assert os.listdir(stage) == []
-
-
 def test_substring_bill_after_intermediate_release(spark):
     """The run-table memo must keep serving correct bills AFTER the
     builder released its position intermediates (the persist()-backed
@@ -480,26 +427,48 @@ def test_exact_substring_rewrite_splices_exactly(spark):
         assert len(orig) - len(txt) == bill[d], d
 
 
-def test_components_driver_cutover_matches_distributed(spark):
-    """The small-graph driver union-find cutover must be bit-identical
-    to the distributed label propagation on the same pairs — chain,
-    clique, and singleton-free shapes — and the distributed path must
-    still engage when the cap is zeroed."""
+def test_components_driver_cutover_matches_distributed(spark, monkeypatch):
+    """The one components operator gives the same closure, names and id
+    types on both branches — driver union-find below
+    SMALL_GRAPH_EDGE_CAP, pointer jumping above it (a cap of 0 forces
+    it) — over a chain, a clique, a self-loop, duplicate and reversed
+    edges, an int32 id schema and an empty edge list."""
     rows = [(i, i + 1) for i in range(0, 20)]  # 21-node chain
     rows += [(100, 101), (100, 102), (101, 102)]  # clique
-    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    fast = {(r.doc_id, r.component) for r in dd.neardup_components(pairs).collect()}
-    saved = dd.SMALL_GRAPH_EDGE_CAP
-    try:
-        dd.SMALL_GRAPH_EDGE_CAP = 0  # force the distributed iteration
-        slow = {
-            (r.doc_id, r.component)
-            for r in dd.neardup_components(pairs).collect()
-        }
-    finally:
-        dd.SMALL_GRAPH_EDGE_CAP = saved
-    assert fast == slow
-    assert {c for _, c in fast} == {0, 100}
+    rows += [(200, 200)]  # self-loop
+    rows += [(300, 301), (301, 300), (300, 301)]  # duplicate + reversed
+    want = {i: 0 for i in range(21)}
+    want |= {100: 100, 101: 100, 102: 100, 200: 200, 300: 300, 301: 300}
+    graphs = {
+        "long": (spark.createDataFrame(rows, "doc_a long, doc_b long"), want),
+        "int32": (spark.createDataFrame(rows, "doc_a int, doc_b int"), want),
+        "empty": (spark.createDataFrame([], "doc_a long, doc_b long"), {}),
+    }
+
+    def closure(pairs):
+        out = dd.neardup_components(pairs)
+        id_type = pairs.schema["doc_a"].dataType
+        assert out.columns == ["doc_id", "component"]
+        assert [f.dataType for f in out.schema.fields] == [id_type, id_type]
+        return {r.doc_id: r.component for r in out.collect()}
+
+    driver = {name: closure(pairs) for name, (pairs, _) in graphs.items()}
+    monkeypatch.setattr(dd, "SMALL_GRAPH_EDGE_CAP", 0)
+    for name, (pairs, expected) in graphs.items():
+        assert closure(pairs) == driver[name], name
+        assert driver[name] == expected, name
+
+
+def test_pathjump_components_match_labelprop(spark, docs, monkeypatch):
+    """On the MinHash near-dup graph of the test corpus, the pointer-
+    jumping branch of neardup_components (forced by a cap of 0) names
+    the same components as the driver union-find closure."""
+    pairs = dd.minhash_neardup_pairs(docs, "doc_id", "text", threshold=0.2)
+    want = {r.doc_id: r.component for r in dd.neardup_components(pairs).collect()}
+    assert want
+    monkeypatch.setattr(dd, "SMALL_GRAPH_EDGE_CAP", 0)
+    got = {r.doc_id: r.component for r in dd.neardup_components(pairs).collect()}
+    assert got == want
 
 
 def test_softdedup_reweight_hand_values(spark, tmp_path):

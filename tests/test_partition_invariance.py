@@ -90,8 +90,8 @@ INVARIANCE_QUERIES = [
     # stratum) decides every quota boundary: the per-(lang, split)
     # membership digests must be a pure function of the md5 order
     "docs_stratified_quota_split",
-    # pointer-jumping closure: the round trajectory changes with
-    # layout-dependent join scheduling but the fixpoint must not
+    # connected-components closure over the memoized MinHash graph:
+    # the fixpoint must not depend on layout
     "docs_neardup_component_census",
     # per-source cumulative windows + keyed re-aggregation: the KS gap
     # and its argmax length must be a pure function of the counts

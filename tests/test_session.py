@@ -1,9 +1,12 @@
 """The one session factory (duckdb_cluster_hash_spark/session.py): the
 ``spark`` fixture comes from ``start_session()``, its settings are the
-host-derived ones, and no other module builds its own SparkSession."""
+host-derived ones, no other module builds its own SparkSession, and no
+other engine module reads the environment (so no code path is chosen by
+an environment variable)."""
 
 from __future__ import annotations
 
+import ast
 import os
 import tempfile
 
@@ -49,3 +52,28 @@ def test_no_other_module_builds_a_session():
                     if "SparkSession.builder" in fh.read():
                         found.append(rel)
     assert found == [], f"build the session with start_session(): {found}"
+
+
+def test_no_other_module_reads_the_environment():
+    pkg = os.path.join(ROOT, "duckdb_cluster_hash_spark")
+    found = []
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for name in filenames:
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, ROOT)
+            if not name.endswith(".py") or rel in ALLOWED:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                ) or (
+                    isinstance(node, ast.ImportFrom)
+                    and node.module == "os"
+                    and {a.name for a in node.names} & {"environ", "getenv"}
+                ):
+                    found.append(f"{rel}:{node.lineno}")
+    assert found == [], f"read deployment settings in session.py only: {found}"
