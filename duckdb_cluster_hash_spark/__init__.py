@@ -12,8 +12,12 @@ Usage::
     import duckdb_cluster_hash_spark as dch
     dch.register_all(spark)          # catalog registration (extension Load)
     spark.sql("SELECT cluster_slot('user:1000')")
+
+Importing the package also installs ``zipshim``, so every Python worker
+that unpickles one of its UDFs stops re-reading ``pyspark.zip`` per task.
 """
 
+from duckdb_cluster_hash_spark import zipshim
 from duckdb_cluster_hash_spark.core import (
     TOTAL_SLOTS,
     DEFAULT_NODES,
@@ -29,6 +33,8 @@ from duckdb_cluster_hash_spark.functions.clusterhash import (
     node_of_slot_col,
     register_all,
 )
+
+zipshim.install()
 
 __version__ = "0.2.0"
 

@@ -1,11 +1,13 @@
 """Spark surface of the cluster-hash core.
 
 One implementation of ``cluster_slot`` / ``cluster_node`` (reference:
-src/clusterhash_extension.cpp:93-124, README.md:61-120): an Arrow-batched
-pandas UDF over a numpy table-driven CRC16, one lookup per byte as in the
-reference kernel (cpp:46-48).  The kernel is positional: one vectorized
-update per byte *position* across the whole batch, so a batch of 10k short
-keys costs ~len(key) numpy ops, not 10k Python loops.
+src/clusterhash_extension.cpp:93-124, README.md:61-120): an Arrow UDF
+(``F.arrow_udf``) over ``slot_arrow``, a table-driven CRC16 with one lookup
+per byte as in the reference kernel (cpp:46-48).  Each distinct key of a
+batch is hashed once (dictionary encoding), and the CRC runs over the raw
+Arrow offset and data buffers one byte *position* at a time: with the keys
+sorted by length, the keys still active at a position are a prefix slice,
+so a batch costs ~max key length numpy ops, not one Python loop per key.
 
 ``cluster_node`` needs no table and no second Python round-trip: it is JVM
 integer arithmetic over the slot.  The reference's hardcoded 6-shard ranges
@@ -22,6 +24,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -30,6 +34,7 @@ from duckdb_cluster_hash_spark.core import CRC16_TABLE, TOTAL_SLOTS, DEFAULT_NOD
 
 __all__ = [
     "TAG_REGEX",
+    "slot_arrow",
     "slot_batch",
     "cluster_slot_col",
     "cluster_node_col",
@@ -38,59 +43,51 @@ __all__ = [
 ]
 
 # First '{', first '}' after it, capture the (possibly empty) tag between.
-# The empty-tag fallback is handled by the caller (cpp:57 `end != start + 1`).
-TAG_REGEX = r"^[^{]*\{([^}]*)\}"
+# An empty or missing tag hashes the whole key (cpp:57 `end != start + 1`).
+TAG_REGEX = r"^[^{]*\{(?P<tag>[^}]*)\}"
 
 _NP_TABLE = np.array(CRC16_TABLE, dtype=np.uint16)
 
 
-# ---------------------------------------------------------------------------
-# Vectorized numpy kernel
-# ---------------------------------------------------------------------------
+def slot_arrow(keys: pa.Array) -> pa.Array:
+    """Slot of each key; NULL -> NULL (int32, matching cpp:116-118).
 
-def _effective_keys(keys: pd.Series) -> pd.Series:
-    """Apply the hash-tag rule vectorized (cpp:52-61 semantics)."""
-    tag = keys.str.extract(TAG_REGEX, expand=False)
-    use_tag = tag.notna() & (tag != "")
-    return keys.mask(use_tag, tag)
+    Non-string input is cast to string first (an integer hashes as its
+    decimal text)."""
+    if isinstance(keys, pa.ChunkedArray):
+        keys = keys.combine_chunks()
+    encoded = pc.dictionary_encode(keys.cast(pa.large_string()))
+    whole = encoded.dictionary
+    tag = pc.struct_field(pc.extract_regex(whole, TAG_REGEX), "tag")
+    has_tag = pc.fill_null(pc.greater(pc.binary_length(tag), 0), False)
+    eff = pc.if_else(has_tag, tag, whole)
 
-
-def _crc16_positional(encoded: list[bytes]) -> np.ndarray:
-    """CRC16/XMODEM of each byte string, vectorized by byte position."""
-    n = len(encoded)
-    lens = np.fromiter((len(b) for b in encoded), dtype=np.int64, count=n)
-    if n == 0:
-        return np.zeros(0, dtype=np.uint16)
-    flat = np.frombuffer(b"".join(encoded), dtype=np.uint8)
-    offsets = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1], out=offsets[1:])
-    crc = np.zeros(n, dtype=np.uint16)
-    max_len = int(lens.max()) if n else 0
-    for pos in range(max_len):
-        active = lens > pos
-        c = crc[active]
-        byte = flat[offsets[active] + pos]
-        crc[active] = ((c << np.uint16(8)) & np.uint16(0xFF00)) ^ _NP_TABLE[
-            ((c >> np.uint16(8)).astype(np.uint16) ^ byte) & np.uint16(0xFF)
-        ]
-    return crc
+    n = len(eff)
+    _, offsets, data = eff.buffers()
+    offsets = np.frombuffer(offsets, np.int64)[eff.offset : eff.offset + n + 1]
+    data = np.frombuffer(data or b"", np.uint8)
+    lens = np.diff(offsets)
+    order = np.argsort(-lens, kind="stable")
+    starts = offsets[:-1][order]
+    # keys longer than each byte position: a prefix of the length order
+    active = np.searchsorted(-lens[order], -np.arange(lens.max(initial=0)))
+    crc = np.zeros(n, np.uint16)
+    for pos, k in enumerate(active):
+        c = crc[:k]
+        crc[:k] = (c << np.uint16(8)) ^ _NP_TABLE[(c >> np.uint16(8)) ^ data[starts[:k] + pos]]
+    slots = np.empty(n, np.int32)
+    slots[order] = crc % TOTAL_SLOTS
+    return pa.array(slots).take(encoded.indices)
 
 
 def slot_batch(keys: pd.Series) -> pd.Series:
-    """Slot of each key; NULL -> NULL (int32, matching cpp:116-118)."""
-    valid = keys.notna()
-    out = pd.Series(np.zeros(len(keys), dtype=np.int32), index=keys.index, dtype="Int32")
-    out[~valid] = pd.NA
-    if valid.any():
-        eff = _effective_keys(keys[valid].astype(str))
-        encoded = [k.encode("utf-8") for k in eff]
-        crc = _crc16_positional(encoded)
-        out[valid] = (crc % TOTAL_SLOTS).astype(np.int32)
-    return out
+    """``slot_arrow`` over a pandas Series: nullable Int32, same index."""
+    slots = slot_arrow(pa.array(keys, from_pandas=True))
+    return slots.to_pandas(types_mapper={pa.int32(): pd.Int32Dtype()}.get).set_axis(keys.index)
 
 
-# The one Spark slot path: ``slot_batch`` run per Arrow batch.
-_SLOT_UDF = F.pandas_udf(slot_batch, IntegerType())
+# The one Spark slot path: ``slot_arrow`` run per Arrow batch.
+_SLOT_UDF = F.arrow_udf(slot_arrow, IntegerType())
 
 
 def _as_col(key) -> Column:
@@ -98,8 +95,9 @@ def _as_col(key) -> Column:
 
 
 def cluster_slot_col(key) -> Column:
-    """``cluster_slot(key)``: slot in [0,16383], NULL-safe, int32."""
-    return _SLOT_UDF(_as_col(key))
+    """``cluster_slot(key)``: slot in [0,16383], NULL-safe, int32; a
+    non-string key hashes as its Spark STRING cast."""
+    return _SLOT_UDF(_as_col(key).cast("string"))
 
 
 def node_of_slot_col(slot, n_nodes=DEFAULT_NODES) -> Column:

@@ -1136,7 +1136,9 @@ def neardup_components(pairs: DataFrame, max_rounds: int = 34) -> DataFrame:
     (wrong) components; the default allows a diameter of 2^34.
     """
     pairs_cp = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    if pairs_cp.count() < SMALL_GRAPH_EDGE_CAP:
+    # one bounded collect both picks the branch and feeds union-find
+    small = pairs_cp.limit(SMALL_GRAPH_EDGE_CAP).collect()
+    if len(small) < SMALL_GRAPH_EDGE_CAP:
         parent: dict = {}
 
         def find(x):
@@ -1147,7 +1149,7 @@ def neardup_components(pairs: DataFrame, max_rounds: int = 34) -> DataFrame:
                 parent[x], x = r, parent[x]
             return r
 
-        for a, b in pairs_cp.collect():
+        for a, b in small:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)

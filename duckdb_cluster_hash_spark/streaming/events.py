@@ -11,8 +11,8 @@ streaming semantics, and how the tests assert stream == batch.
 Scale notes: watermarks bound state (late data beyond the delay is
 dropped); ``foreachBatch`` + ``partitionBy(node_id)`` gives exactly-once
 per-shard output directories with state-store-free routing;
-``cluster_node`` is the Arrow-batched slot kernel plus JVM node arithmetic,
-a stateless scalar pandas UDF that Structured Streaming runs per batch.
+``cluster_node`` is the Arrow slot kernel plus JVM node arithmetic, a
+stateless scalar Arrow UDF that Structured Streaming runs per batch.
 
 FIXED-COST FLOOR (measured round 8, sf0.1, local[32], sequential): the 8
 TRUE streaming catalog queries sum 27.4s cold / 16.9s warm.  The 10.5s

@@ -181,14 +181,17 @@ def main(names):
             print(f"FAIL {name}: spark raised {type(exc).__name__}: {exc}")
             failures += 1
             continue
+        spark_s = time.time() - t0
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            print(f"ROWS-ONLY {name}: {len(srows)} rows (spark {spark_s:.1f}s)")
             continue
+        t0 = time.time()
         try:
             rel = con.sql(oracles[name])
             ocols = [d[0] for d in rel.description]
             otypes = [str(t) for t in rel.types]
             orows = rel.fetchall()
+            oracle_s = time.time() - t0
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: oracle raised {type(exc).__name__}: {exc}")
             failures += 1
@@ -214,7 +217,8 @@ def main(names):
             failures += 1
             print(f"FAIL {name}: " + "; ".join(problems))
         else:
-            print(f"OK   {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            print(f"OK   {name}: {len(srows)} rows "
+                  f"(spark {spark_s:.1f}s, oracle {oracle_s:.1f}s)")
     freed_total += clear_shared_cache()
     print(f"\n{len(selected) - failures}/{len(selected)} passed "
           f"({freed_total} memo entries reclaimed)")

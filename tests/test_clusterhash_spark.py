@@ -17,6 +17,7 @@ from duckdb_cluster_hash_spark.functions.clusterhash import (
     node_of_slot_col,
 )
 from tests.test_core import GOLDENS
+from tests.test_plans import plan_of
 
 
 @pytest.fixture(scope="module")
@@ -185,3 +186,60 @@ def test_user_keys_histogram_spark(spark):
         .collect()
     }
     assert hist == {1: 332, 2: 337, 3: 331}
+
+
+def test_int_key_hashes_as_its_string(spark):
+    """An INT key is cast to STRING in the JVM before the kernel, on both
+    surfaces: its slot is get_slot(str(i))."""
+    register_all(spark)
+    df = spark.range(-5, 200).select(F.col("id").cast("int").alias("i"))
+    df.createOrReplaceTempView("int_keys")
+    rows = df.select("i", cluster_slot_col("i").alias("col")).join(
+        spark.sql("SELECT i, cluster_slot(i) AS sql FROM int_keys"), "i"
+    ).collect()
+    assert len(rows) == 205
+    for r in rows:
+        assert r["col"] == r["sql"] == get_slot(str(r["i"])), r
+
+
+ROUTE_SQL = (
+    "SELECT cluster_node(k) AS node, count(*) AS n, "
+    "sum(cluster_slot(k)) AS slot_sum FROM route_keys GROUP BY cluster_node(k)"
+)
+
+
+def test_route_plan_has_at_most_two_python_nodes(spark):
+    """The README routing query plans at most two Python evaluations: the
+    GROUP BY key is pulled into its own Project before Python UDFs are
+    extracted, so its slot and the summed slot cannot share one node.  A
+    node over a single key column plans exactly one."""
+    register_all(spark)
+    keys = spark.range(100).select(F.concat(F.lit("k"), F.col("id")).alias("k"))
+    keys.createOrReplaceTempView("route_keys")
+    assert plan_of(spark.sql(ROUTE_SQL)).count("ArrowEvalPython") <= 2
+    assert plan_of(keys.select(cluster_node_col("k"))).count("ArrowEvalPython") == 1
+
+
+def test_worker_skips_unchanged_zip_rereads(spark):
+    """Inside a Python worker that imported the package, an
+    importlib.invalidate_caches() over unchanged archives (pyspark.zip
+    among them) reads no zip directory.  The first call stamps every
+    importer; the second is the one a later task pays."""
+
+    def count_rereads(_):
+        import importlib
+        import zipimport
+
+        import duckdb_cluster_hash_spark  # noqa: F401 -- installs the shim
+
+        importlib.invalidate_caches()
+        calls = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda a: calls.append(a) or read(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        yield len(calls)
+
+    assert spark.sparkContext.parallelize(range(2), 2).mapPartitions(count_rereads).collect() == [0, 0]
