@@ -238,42 +238,14 @@ def main() -> int:
     # cleared between repeat runs (clear_shared_cache below), so each
     # timed run pays every memo build — run 1 and run N measure the same
     # cold-memo semantics.
-    import tempfile as _tf
-
-    from duckdb_cluster_hash_spark.streaming import events as _sev
-
-    _base = "".join(
-        c if c.isalnum() else "_" for c in os.path.basename(sf_dir.rstrip("/"))
-    )
-    _tmp = _tf.gettempdir()
-    fixture_stagers = [
-        # one-chunk event replay dir (hourly/attribution/sessions/
-        # user_totals/outer_attribution/routed_sink)
-        lambda: _sev.stage_events_as_stream(
-            spark, sf_dir, os.path.join(_tmp, f"dch_stream_stage_{_base}"),
-            n_chunks=1, single_file_chunks=False,
-        ),
-        # three-phase watermark replay dir (late_data)
-        lambda: _sev.stage_events_three_phase(
-            spark, sf_dir, os.path.join(_tmp, f"dch_stream_late_{_base}")
-        ),
-        # duplicate-redelivery replay dir (dedup_replay)
-        lambda: _sev.stage_events_with_duplicates(
-            spark, sf_dir, os.path.join(_tmp, f"dch_stream_dup_{_base}")
-        ),
-        # three-chunk documents replay dir (neardup_ingest/media_dedup)
-        lambda: _sev.stage_documents_as_stream(
-            spark, sf_dir, os.path.join(_tmp, f"dch_stream_docs_{_base}")
-        ),
-    ]
+    from duckdb_cluster_hash_spark.streaming.events import REPLAYS, stage_all
 
     def prestage() -> float:
         t0 = time.time()
-        with ThreadPoolExecutor(max_workers=len(fixture_stagers)) as ex:
-            list(ex.map(lambda f: f(), fixture_stagers))
+        stage_all(spark, sf_dir)
         dt = round(time.time() - t0, 3)
         print(
-            f"prestage: {len(fixture_stagers)} replay-dir fixture writes "
+            f"prestage: {len(REPLAYS)} replay-dir fixture writes "
             f"in {dt:.1f}s (untimed; staging is once per process — "
             f"repeat runs cost ~0)",
             file=sys.stderr,

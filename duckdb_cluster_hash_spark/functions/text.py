@@ -31,7 +31,6 @@ __all__ = [
     "language_id_col",
     "quality_features",
     "quality_score_col",
-    "rolling_hash_col",
     "repetition_stats",
     "tfidf_top_terms",
     "bm25_topk",
@@ -166,29 +165,6 @@ def quality_score_col() -> Column:
     punct_ok = F.lit(1.0) - F.least(F.col("punct_ratio") * 4, F.lit(1.0))
     score = 0.25 * len_ok + 0.25 * rep_ok + 0.25 * stop_presence + 0.25 * punct_ok
     return F.round(score * 10000) / 10000
-
-
-def rolling_hash_col(text: Column, base: int = 31, mod: int = 2147483647) -> Column:
-    """Polynomial rolling hash over the UTF-8 bytes of ``text``.
-
-    h_{i+1} = (h_i * base + byte_i) mod ``mod`` — a classic Rabin-Karp
-    document fingerprint; the fold stays < 2^63 because mod < 2^31.
-    Implemented as a higher-order aggregate (fine for per-doc
-    fingerprints; for trillion-token corpora use the xxhash64 builtin
-    instead — this fingerprint exists for cross-engine reproducibility).
-    """
-    raw = F.encode(text, "UTF-8")
-    hexed = F.hex(raw)
-    nbytes = F.octet_length(raw)
-    byte_at = lambda i: F.conv(F.substring(hexed, (i * 2) - 1, 2), 16, 10).cast(
-        "bigint"
-    )
-    fold = F.aggregate(
-        F.sequence(F.lit(1), nbytes),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: (acc * base + byte_at(i)) % mod,
-    )
-    return F.when(nbytes == 0, F.lit(0).cast("bigint")).otherwise(fold)
 
 
 def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -518,12 +494,14 @@ def bigram_lift_top_sql(
 
 
 def rolling_hash_pudf(base: int = 31, mod: int = 2147483647):
-    """Arrow-batched fast path of :func:`rolling_hash_col`.
+    """Polynomial rolling hash over the UTF-8 bytes of a text column.
 
-    Bit-identical values (same integer recurrence), computed positionally
-    in numpy: one vectorized update per byte position across the batch —
-    the throughput path for corpus-scale fingerprinting.  Intermediate
-    h*base + b < 2^36, safely inside int64.
+    h_{i+1} = (h_i * base + byte_i) mod ``mod`` — a classic Rabin-Karp
+    document fingerprint (0 for the empty string, NULL for NULL),
+    computed positionally in numpy: one vectorized update per byte
+    position across the Arrow batch.  Intermediate h*base + b < 2^36,
+    safely inside int64.  ``oracle_text.rolling_hash_sql`` is the DuckDB
+    twin.
     """
     @F.pandas_udf(LongType())
     def _rh(texts: pd.Series) -> pd.Series:

@@ -4,9 +4,3 @@ from __future__ import annotations
 
 
 _USER_TAG_KEY_SQL = "'{user:' || user_id::VARCHAR || '}'"
-
-
-def _os_path_basename(sf_dir: str) -> str:
-    import os as _os
-
-    return _os.path.basename(sf_dir.rstrip("/"))

@@ -247,17 +247,13 @@ def docs_exact_substring_rewrite(
     audit -> originals) are doc_id-keyed; no cartesian, no
     corpus-sized collect, no Python.  The run table is the family memo
     shared with the pair view and the bill."""
-    import os as _os
-    import tempfile as _tf
+    from duckdb_cluster_hash_spark.streaming.events import scratch_dir
 
     docs = _t(spark, sf_dir, "documents")
     rewritten = _dd.exact_substring_rewrite(
         docs, "doc_id", "text", k=40, cap=64
     )
-    path = _os.path.join(
-        _tf.gettempdir(),
-        f"dch_substr_rewrite_{_os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = scratch_dir("substr_rewrite", sf_dir)
     rewritten.write.mode("overwrite").parquet(path)
     art = spark.read.parquet(path)
     orig = docs.select(

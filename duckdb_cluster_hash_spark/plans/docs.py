@@ -1699,6 +1699,11 @@ _BPE_PARTIAL_SCHEMA = "lhs string, rhs string, n long"
 # runs.  8192 encoded words x ~16 symbols x k=16 iterations is ~2M driver
 # Counter ops (well under a second) — the cap bounds driver work by
 # construction, never by data size.
+# Measured (sf0.1, start_session() on local[4], memos cleared before
+# each run, warm median of 3, jobs per job group, outputs equal):
+# driver side vs cap 0 — docs_bpe_training_loop 1.17 s / 6 jobs vs
+# 4.61 s / 22 jobs, docs_bpe_encode 0.87 s / 8 jobs vs 4.66 s / 24 jobs.
+# The driver side stays at sf0.1; the 3x / 10x sizes are not measured.
 _BPE_DRIVER_CAP = 8192
 
 
@@ -4150,6 +4155,11 @@ UNIGRAM_ITERS = 3  # prune iterations; trajectory rows it = 0..3
 # x <=16 chars is ~2M dict operations across seed + 4 segmentations
 # (well under a second); the cap bounds driver work by construction,
 # never by data size.  Above it the distributed loop runs unchanged.
+# Measured (sf0.1, start_session() on local[4], memos cleared before
+# each run, warm median of 3, jobs per job group, outputs equal):
+# docs_unigram_lm_train 0.87 s / 6 jobs on the driver side vs 6.94 s /
+# 30 jobs at cap 0.  The driver side stays at sf0.1; the 3x / 10x sizes
+# are not measured.
 _UNIGRAM_DRIVER_CAP = 8192
 
 
@@ -4686,6 +4696,11 @@ COVERAGE_GREEDY_K = 8
 # run the greedy on the driver (one limit-capped collect, ~tens of MB at
 # the cap); above it the distributed per-iteration loop runs.  The cap
 # bounds driver memory by construction, never by data size.
+# Measured (sf0.1, start_session() on local[4], memos cleared before
+# each run, warm median of 3, jobs per job group, outputs equal):
+# docs_coverage_greedy_selection 2.26 s / 8 jobs on the driver side vs
+# 3.36 s / 37 jobs at cap 0.  The driver side stays at sf0.1; the 3x /
+# 10x sizes are not measured.
 _COVERAGE_DRIVER_CAP = 1_000_000
 
 

@@ -125,8 +125,7 @@ def emb_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plugs into the same index/probe machinery; the md5 quantizer is used
     here so the DuckDB oracle can recompute cell assignment bit-for-bit.
     """
-    import os as _os
-    import tempfile as _tf
+    from duckdb_cluster_hash_spark.streaming.events import scratch_dir
 
     emb = _t(spark, sf_dir, "embeddings")
     n_cells = _sim.scaled_n_cells(_emb_n(emb))
@@ -134,10 +133,7 @@ def emb_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in _emb_q0(emb)["embedding"]
     ]
-    index_path = _os.path.join(
-        _tf.gettempdir(),
-        f"dch_ivf_index_{_os.path.basename(sf_dir.rstrip('/'))}_c{n_cells}",
-    )
+    index_path = scratch_dir(f"ivf_index_c{n_cells}", sf_dir)
     _sim.ivf_write_index(emb, index_path, dim=64, n_cells=n_cells)
     return _sim.ivf_probe_topk(
         spark, index_path, qvec, k=10, nprobe=4, n_cells=n_cells

@@ -453,16 +453,12 @@ def events_node_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, and every shard-local query afterwards reads 1/n of the data
     via PartitionFilters (asserted in test_plans).
     """
-    import os as _os
-    import tempfile as _tf
-
     from duckdb_cluster_hash_spark.operators.distribution import (
         write_partitioned_by_node,
     )
+    from duckdb_cluster_hash_spark.streaming.events import scratch_dir
 
-    path = _os.path.join(
-        _tf.gettempdir(), f"dch_nodeparts_{_os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("nodeparts", sf_dir)
     ev = _t(spark, sf_dir, "events").withColumn(
         "user_key", F.concat(F.lit("user:"), F.col("user_id").cast("string"))
     )

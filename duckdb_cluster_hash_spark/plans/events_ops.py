@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark.functions.clusterhash import cluster_node_col
 from duckdb_cluster_hash_spark.plans._registry import _t, query
+from duckdb_cluster_hash_spark.streaming.events import scratch_dir
 
 
 @query(
@@ -641,12 +642,8 @@ def events_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
 
-    base_tag = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    root = _os.path.join(_tf.gettempdir(), f"dch_erasure_{base_tag}")
+    root = scratch_dir("erasure", sf_dir)
     _sh.rmtree(root, ignore_errors=True)
     ev = _t(spark, sf_dir, "events")
     (

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark.plans._registry import _money_sum, _t, query
+from duckdb_cluster_hash_spark.streaming.events import scratch_dir
 
 
 @query(
@@ -24,12 +25,7 @@ def formats_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders out as headered CSV, read it back with an explicit schema, and
     aggregate — doubles survive because Spark writes the shortest decimal
     repr and parses it back to the identical bits."""
-    import os as _os
-    import tempfile as _tf
-
-    path = _os.path.join(
-        _tf.gettempdir(), f"dch_csv_{_os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("csv", sf_dir)
     orders = _t(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
     orders.write.mode("overwrite").option("header", "true").csv(path)
     back = (
@@ -61,12 +57,7 @@ def formats_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def formats_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source/sink (B11), graded by the oracle: part rows out
     as JSONL, read back with an explicit schema, aggregated."""
-    import os as _os
-    import tempfile as _tf
-
-    path = _os.path.join(
-        _tf.gettempdir(), f"dch_json_{_os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("json", sf_dir)
     part = _t(spark, sf_dir, "part").select("p_brand", "p_size")
     part.write.mode("overwrite").json(path)
     back = spark.read.schema("p_brand string, p_size int").json(path)
@@ -101,14 +92,9 @@ def formats_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back scan keeps pushdown/pruning (ORC is a first-class Spark
     columnar source with its own predicate pushdown).
     """
-    import os as _os
-    import tempfile as _tf
-
     from duckdb_cluster_hash_spark.sources.formats import read_table, write_table
 
-    path = _os.path.join(
-        _tf.gettempdir(), f"dch_orc_{_os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("orc", sf_dir)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice"
     )
@@ -161,12 +147,7 @@ def formats_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``split(value, ' ')`` would count empty strings under
     consecutive/leading spaces; ``[^ ]+`` cannot).
     """
-    import os as _os
-    import tempfile as _tf
-
-    path = _os.path.join(
-        _tf.gettempdir(), f"dch_text_{_os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir("text", sf_dir)
     docs = _t(spark, sf_dir, "documents")
     docs.select(
         F.regexp_replace(F.col("text"), "[\r\n]", " ").alias("value")
@@ -205,12 +186,8 @@ def formats_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB corpus gaining a column.
     """
     import os as _os
-    import tempfile as _tf
 
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    root = _os.path.join(_tf.gettempdir(), f"dch_schema_evo_{base}")
+    root = scratch_dir("schema_evo", sf_dir)
     docs = _t(spark, sf_dir, "documents")
     docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars").write.mode(
         "overwrite"
@@ -259,13 +236,7 @@ def formats_partitioned_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
     the same mechanism is the streaming sink's exactly-once story
     (streaming/events.py:route_events_to_nodes).
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    out = _os.path.join(_tf.gettempdir(), f"dch_dyn_overwrite_{base}")
+    out = scratch_dir("dyn_overwrite", sf_dir)
     ev = _t(spark, sf_dir, "events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     backfill = ev.where(F.col("event_type") == "click").withColumn(
@@ -316,13 +287,9 @@ def formats_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob as _glob
     import os as _os
-    import tempfile as _tf
 
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    frag_dir = _os.path.join(_tf.gettempdir(), f"dch_frag_{base}")
-    comp_dir = _os.path.join(_tf.gettempdir(), f"dch_compact_{base}")
+    frag_dir = scratch_dir("frag", sf_dir)
+    comp_dir = scratch_dir("compact", sf_dir)
     ev = _t(spark, sf_dir, "events")
     ev.repartition(64).write.mode("overwrite").parquet(frag_dir)
     n_frag = len(_glob.glob(_os.path.join(frag_dir, "*.parquet")))
@@ -392,14 +359,10 @@ def formats_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
 
     from pyspark.sql import Window
 
-    base_tag = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    root = _os.path.join(_tf.gettempdir(), f"dch_mor_{base_tag}")
+    root = scratch_dir("mor", sf_dir)
     base_dir = _os.path.join(root, "base")
     delta_dir = _os.path.join(root, "delta")
     _sh.rmtree(root, ignore_errors=True)

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark.plans._registry import _money_sum, _t, query
-from duckdb_cluster_hash_spark.plans._shared import _os_path_basename
+from duckdb_cluster_hash_spark.streaming.events import scratch_dir
 
 
 def _copurchase_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,23 +579,21 @@ def orders_bucketed_coloc_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os as _os
     import shutil as _shutil
-    import tempfile as _tf
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
-    suffix = "".join(
-        c if c.isalnum() else "_" for c in _os_path_basename(sf_dir)
-    )
-    t_orders, t_cust = f"bkt_orders_{suffix}", f"bkt_cust_{suffix}"
+    loc_orders = scratch_dir("bkt_orders", sf_dir)
+    loc_cust = scratch_dir("bkt_cust", sf_dir)
+    t_orders, t_cust = _os.path.basename(loc_orders), _os.path.basename(loc_cust)
     # external locations under tmp: DROP TABLE in a fresh session cannot
     # see a previous process's managed-table directory, which then fails
     # the write with LOCATION_ALREADY_EXISTS — so own the location
     # explicitly and clear it before each (re)build
-    for t, df_side, bucket_col in (
-        (t_orders, orders.select("o_custkey", "o_totalprice"), "o_custkey"),
-        (t_cust, cust.select("c_custkey", "c_mktsegment"), "c_custkey"),
+    for loc, df_side, bucket_col in (
+        (loc_orders, orders.select("o_custkey", "o_totalprice"), "o_custkey"),
+        (loc_cust, cust.select("c_custkey", "c_mktsegment"), "c_custkey"),
     ):
-        loc = _os.path.join(_tf.gettempdir(), f"dch_{t}")
+        t = _os.path.basename(loc)
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         _shutil.rmtree(loc, ignore_errors=True)
         df_side.write.bucketBy(8, bucket_col).sortBy(bucket_col).option(
@@ -1535,13 +1533,9 @@ def orders_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os as _os
     import shutil as _shutil
-    import tempfile as _tf
 
-    base_tag = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    tbl = f"bkt_lookup_orders_{base_tag}"
-    loc = _os.path.join(_tf.gettempdir(), f"dch_{tbl}")
+    loc = scratch_dir("bkt_lookup_orders", sf_dir)
+    tbl = _os.path.basename(loc)
     # own the location explicitly (same pattern as the coloc join): a
     # fresh session cannot DROP a previous process's managed directory
     if not spark.catalog.tableExists(tbl) or not _os.path.isdir(loc):

@@ -10,28 +10,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark.streaming import events as _ev
 from duckdb_cluster_hash_spark.oracle import node_sql as _node_sql
-from duckdb_cluster_hash_spark.plans._registry import _t, query
+from duckdb_cluster_hash_spark.plans._registry import _money_sum, _t, query
 from duckdb_cluster_hash_spark.plans._shared import _USER_TAG_KEY_SQL
 
 
-def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
-    """Isolated session clone (shared SparkContext) whose shuffle width —
-    and therefore state-store partition count — is DERIVED from the
-    staged replay volume (streaming/events.staged_stream_shuffle_partitions)
-    instead of the fixed 8 used through round 14: at sf0.1 every staged
-    replay is ≤2 MB, so the state store opens/commits ONE partition per
-    micro-batch rather than 8 (7 of them empty), and at 100 TB the same
-    rule widens with the data.  The clone keeps the width off the shared
-    session's batch config."""
-    s2 = spark.newSession()
-    s2.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_ev.staged_stream_shuffle_partitions(stage_dir)),
-    )
-    # Default (HDFS-backed) state store: RocksDB measured slower at
-    # replay state sizes (plans/r15/isolate_r15_rocksdb_rejected.json).
-    # A providerClass set in the SparkContext conf still reaches s2.
-    return s2
+def _hour_rollup(sink: DataFrame) -> DataFrame:
+    return sink.select(
+        (F.col("window_start_epoch") / 3600).cast("bigint").alias("hour_bucket"),
+        "event_type",
+        "n_events",
+        "total_value",
+    ).orderBy("hour_bucket", "event_type")
 
 
 @query(
@@ -47,8 +36,8 @@ def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
 def events_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Structured Streaming execution graded by the batch oracle
     (C7 — every other C7 driver row runs the batch twin of a streaming
-    function; this one runs readStream → watermarked windowed agg →
-    writeStream end-to-end): events staged as a file source, consumed
+    function; this one runs file-source stream → watermarked windowed
+    agg → stream sink end-to-end): events staged as a file source, consumed
     with trigger=availableNow into a memory sink, result read back from
     the sink table.
 
@@ -60,43 +49,9 @@ def events_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     topology on a real bus is the production ingest path; state is
     bounded by the watermark per the streaming module's design.
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_stage_{base}")
-    _ev.stage_events_as_stream(
-        spark, sf_dir, stage_dir, n_chunks=1, single_file_chunks=False
-    )
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
-    agg = _ev.hourly_event_counts(stream)
-    sink = f"dch_stream_hourly_{base}"
-    handle = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_hourly micro-batch did not finish")
-    return (
-        s2.table(sink)
-        .select(
-            (F.col("window_start_epoch") / 3600).cast("bigint").alias("hour_bucket"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("hour_bucket", "event_type")
+    stream = _ev.replay_stream(spark, "events", sf_dir)
+    return _hour_rollup(
+        _ev.run_to_sink(_ev.hourly_event_counts(stream), "hourly", "complete")
     )
 
 
@@ -150,17 +105,12 @@ def events_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop count.
     """
     import os as _os
-    import tempfile as _tf
 
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_late_{base}")
-    _ev.stage_events_three_phase(spark, sf_dir, stage_dir)
-    s2 = _stream_session(spark, stage_dir)
+    stream = _ev.replay_stream(spark, "three_phase", sf_dir)
     # Sanity: staging routes every global-argmax row to phase 0, so the
     # staged phase-0 max must equal the corpus max on ANY corpus.  A
     # mismatch means the staging rule itself regressed — fail loudly.
+    stage_dir = _ev.stage(spark, "three_phase", sf_dir)
     staged_p0_max = spark.read.parquet(
         _os.path.join(stage_dir, "phase=0")
     ).agg(F.max("ts")).head()[0]
@@ -170,34 +120,8 @@ def events_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             "events_streaming_late_data: staged phase 0 lost the corpus "
             f"max ts (phase0 {staged_p0_max}, global {global_max})"
         )
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
     agg = _ev.hourly_event_counts(stream, watermark="10 minutes")
-    sink = f"dch_stream_late_sink_{base}"
-    handle = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_late_data micro-batches did not finish")
-    return (
-        s2.table(sink)
-        .select(
-            (F.col("window_start_epoch") / 3600).cast("bigint").alias("hour_bucket"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("hour_bucket", "event_type")
-    )
+    return _hour_rollup(_ev.run_to_sink(agg, "late_sink", "append"))
 
 
 @query(
@@ -231,42 +155,14 @@ def events_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch state-eviction behavior is pinned in
     tests/test_streaming.py where chunk boundaries belong.
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_stage_{base}")
-    _ev.stage_events_as_stream(
-        spark, sf_dir, stage_dir, n_chunks=1, single_file_chunks=False
-    )
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "events", sf_dir)
     pairs = _ev.attribute_purchases_to_clicks(stream)
-    sink = f"dch_stream_attrib_{base}"
-    handle = (
-        pairs.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_attribution micro-batch hung")
     return (
-        s2.table(sink)
+        _ev.run_to_sink(pairs, "attrib", "append")
         .groupBy("click_id", "user_id", "click_epoch")
         .agg(
             F.count("*").cast("bigint").alias("n_purchases"),
-            F.round(F.sum(F.col("purchase_value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("purchased_value"),
+            _money_sum("purchase_value").alias("purchased_value"),
         )
         .orderBy("click_id")
     )
@@ -289,7 +185,7 @@ def events_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     is ``events_dedup_ingest``; this runs ``dropDuplicatesWithinWatermark``
     end-to-end): delivery 0 streams the whole corpus, delivery 1 redelivers
     a deterministic ~30% of it (md5 bucket of event_id, the staging rule in
-    streaming/events.py:stage_events_with_duplicates), and the deduped sink
+    the ``duplicates`` replay in streaming/events.py), and the deduped sink
     must equal the clean batch aggregate.
 
     Both dedup paths are exercised on any corpus: a redelivered row whose
@@ -303,41 +199,14 @@ def events_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     bounded by delivery-rate x delay, not stream length; the sink rollup
     is an ordinary partial-agg groupBy.
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_dup_{base}")
-    _ev.stage_events_with_duplicates(spark, sf_dir, stage_dir)
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "duplicates", sf_dir)
     deduped = _ev.dedup_events_stream(stream, watermark="10 minutes")
-    sink = f"dch_stream_dedup_{base}"
-    handle = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_dedup_replay micro-batches hung")
     return (
-        s2.table(sink)
+        _ev.run_to_sink(deduped, "dedup", "append")
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total_value"),
+            _money_sum("value").alias("total_value"),
         )
         .orderBy("event_type")
     )
@@ -376,35 +245,9 @@ def events_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the shared one-chunk stage dir (same staging as
     events_streaming_hourly/attribution — zero extra staging I/O).
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_stage_{base}")
-    _ev.stage_events_as_stream(
-        spark, sf_dir, stage_dir, n_chunks=1, single_file_chunks=False
-    )
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "events", sf_dir)
     sessions = _ev.sessionize(stream, gap="30 minutes")
-    sink = f"dch_stream_sess_{base}"
-    handle = (
-        sessions.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_sessions micro-batch hung")
-    return s2.table(sink).select(
+    return _ev.run_to_sink(sessions, "sess", "complete").select(
         "user_id", "session_start_epoch", "n_events", "total_value"
     )
 
@@ -439,39 +282,13 @@ def events_streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout; Arrow transfer batches per group — the 10-100x-over-per-row
     Python rule (pyspark_guide) applied to the stateful path.
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_stage_{base}")
-    _ev.stage_events_as_stream(
-        spark, sf_dir, stage_dir, n_chunks=1, single_file_chunks=False
-    )
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "events", sf_dir)
     # NoTimeout for the finite replay: with a processing-time timeout
     # armed the engine schedules empty batches forever to evaluate it
     # and availableNow never terminates (accumulation is identical; the
     # eviction path is pinned in tests/test_streaming.py).
     totals = _ev.running_user_totals(stream, timeout_minutes=None)
-    sink = f"dch_stream_totals_{base}"
-    handle = (
-        totals.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_user_totals micro-batch hung")
-    return s2.table(sink).select(
+    return _ev.run_to_sink(totals, "totals", "update").select(
         "user_id", "n_events", "total_value_micro", "last_seen_epoch"
     )
 
@@ -532,45 +349,16 @@ def events_streaming_outer_attribution(
     Scale: same bounded joint state as the inner variant; outer rows add
     no state, they are emitted at eviction time.
     """
-    import os as _os
-    import tempfile as _tf
-
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_stage_{base}")
-    _ev.stage_events_as_stream(
-        spark, sf_dir, stage_dir, n_chunks=1, single_file_chunks=False
-    )
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "events", sf_dir)
     pairs = _ev.attribute_purchases_to_clicks(stream, join_type="left_outer")
-    sink = f"dch_stream_outer_{base}"
-    handle = (
-        pairs.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_outer_attribution hung")
     return (
-        s2.table(sink)
+        _ev.run_to_sink(pairs, "outer", "append")
         .groupBy("click_id", "user_id", "click_epoch")
         .agg(
             F.count("purchase_id").cast("bigint").alias("n_purchases"),
-            F.coalesce(
-                F.round(
-                    F.sum(F.col("purchase_value").cast("decimal(18,4)")), 2
-                ).cast("double"),
-                F.lit(0.0),
-            ).alias("purchased_value"),
+            F.coalesce(_money_sum("purchase_value"), F.lit(0.0)).alias(
+                "purchased_value"
+            ),
         )
         .orderBy("click_id")
     )
@@ -609,39 +397,20 @@ def events_streaming_routed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout IS the cluster data placement — a downstream per-shard
     consumer reads one node_id=N directory, partition-pruned.
     """
-    import os as _os
     import shutil as _sh
-    import tempfile as _tf
 
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_stage_{base}")
-    _ev.stage_events_as_stream(
-        spark, sf_dir, stage_dir, n_chunks=1, single_file_chunks=False
-    )
-    out_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_routed_{base}")
-    ckpt_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_routed_ck_{base}")
+    stream = _ev.replay_stream(spark, "events", sf_dir)
+    out_dir = _ev.scratch_dir("stream_routed", sf_dir)
+    ckpt_dir = _ev.scratch_dir("stream_routed_ck", sf_dir)
     _sh.rmtree(out_dir, ignore_errors=True)
     _sh.rmtree(ckpt_dir, ignore_errors=True)
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
-    handle = _ev.route_events_to_nodes(stream, out_dir, ckpt_dir)
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("events_streaming_routed_sink micro-batch hung")
+    _ev.drain(_ev.route_events_to_nodes(stream, out_dir, ckpt_dir))
     return (
         spark.read.parquet(out_dir)
         .groupBy("node_id")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total_value"),
+            _money_sum("value").alias("total_value"),
         )
         .select(F.col("node_id").cast("int").alias("node_id"),
                 "n_events", "total_value")
@@ -696,42 +465,17 @@ def docs_streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     than the watermark — bounded by ingest-rate x delay, not stream
     length; the sink rollup is an ordinary partial-agg groupBy.
     """
-    import os as _os
-    import tempfile as _tf
-
     from duckdb_cluster_hash_spark.operators.dedup import simhash64_project
 
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_docs_{base}")
-    _ev.stage_documents_as_stream(spark, sf_dir, stage_dir)
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "docs", sf_dir)
     deduped = (
         simhash64_project(stream, "text")
         .select("ts", "simhash_lo", "simhash_hi")
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["simhash_lo", "simhash_hi"])
     )
-    sink = f"dch_stream_docdedup_{base}"
-    handle = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("docs_streaming_neardup_ingest micro-batches hung")
     return (
-        s2.table(sink)
+        _ev.run_to_sink(deduped, "docdedup", "append")
         .groupBy(
             ((F.col("simhash_lo") + F.col("simhash_hi")) % 8).alias("sig_bucket")
         )
@@ -805,23 +549,9 @@ def docs_streaming_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the text ingest query (one staging pass per corpus per
     process).
     """
-    import os as _os
-    import tempfile as _tf
-
     from duckdb_cluster_hash_spark.operators import multimodal as _mm
 
-    base = "".join(
-        c if c.isalnum() else "_" for c in _os.path.basename(sf_dir.rstrip("/"))
-    )
-    stage_dir = _os.path.join(_tf.gettempdir(), f"dch_stream_docs_{base}")
-    _ev.stage_documents_as_stream(spark, sf_dir, stage_dir)
-    s2 = _stream_session(spark, stage_dir)
-    stream = (
-        s2.readStream.schema(_ev.DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
+    stream = _ev.replay_stream(spark, "docs", sf_dir)
     bands = [f"b{i}" for i in range(8)]
     deduped = (
         _mm.pnm_dhash(
@@ -831,23 +561,12 @@ def docs_streaming_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(bands)
     )
-    sink = f"dch_stream_mediadedup_{base}"
-    handle = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not handle.awaitTermination(300):
-        handle.stop()
-        raise RuntimeError("docs_streaming_media_dedup micro-batches hung")
     lo = sum(F.col(f"b{i}").cast("bigint") * (1 << (8 * i)) for i in range(4))
     hi = sum(
         F.col(f"b{i + 4}").cast("bigint") * (1 << (8 * i)) for i in range(4)
     )
     return (
-        s2.table(sink)
+        _ev.run_to_sink(deduped, "mediadedup", "append")
         .select(lo.alias("lo"), hi.alias("hi"))
         .groupBy(((F.col("lo") + F.col("hi")) % 8).alias("sig_bucket"))
         .agg(

@@ -14,24 +14,33 @@ per-shard output directories with state-store-free routing;
 ``cluster_node`` is the Arrow slot kernel plus JVM node arithmetic, a
 stateless scalar Arrow UDF that Structured Streaming runs per batch.
 
+REPLAY HARNESS: every catalog streaming query replays a staged corpus.
+:data:`REPLAYS` is the fixture table (stager, schema, files per
+trigger per kind); :func:`stage` writes a kind once per process into
+its :func:`scratch_dir`; :func:`replay_stream` opens the stream in a
+derived-width session clone; :func:`run_to_sink` / :func:`drain` run
+it under the one :data:`REPLAY_TIMEOUT_S`.  A query body keeps only
+its operator and its rollup.
+
 FIXED-COST FLOOR (measured round 8, sf0.1, local[32], sequential): the 8
 TRUE streaming catalog queries sum 27.4s cold / 16.9s warm.  The 10.5s
 cold-warm gap is one-time staging, ALREADY shared per process via
-``_stage_once`` (six queries read the same staged dir; bench pays it
-once).  The warm ~2.1s/query is micro-batch engine overhead — per query:
-a fresh session clone, stream source listing, state-store init/commit
-per batch, memory-sink collect — with the single-batch floor at ~1.2s
-(``events_streaming_hourly``) and the rest scaling with their REQUIRED
-batch counts.  The three shareable-cost candidates were each checked:
-(a) staging — already shared; (b) checkpoint-root reuse across runs —
-semantically wrong here (committed offsets would SKIP the replay that
-is the graded behavior); (c) state-store width — every query already
-clones its session at shuffle.partitions=8.  Multi-batch replays exist
-only where the oracle grades batch-boundary semantics (late_data's
-3-phase watermark eviction, dedup_replay's cross-batch state); no phase
-is removable without un-grading the behavior it exists to pin.  Treat
-~17s warm (≤ ~30s under 8-way bench contention) as the documented floor
-for this suite rather than a regression signal.
+``stage`` (six queries read the same staged dir; bench pays it once
+through ``stage_all``).  The warm ~2.1s/query is micro-batch engine
+overhead — per query: a fresh session clone, stream source listing,
+state-store init/commit per batch, memory-sink collect — with the
+single-batch floor at ~1.2s (``events_streaming_hourly``) and the rest
+scaling with their REQUIRED batch counts.  The three shareable-cost
+candidates were each checked: (a) staging — already shared; (b)
+checkpoint-root reuse across runs — semantically wrong here (committed
+offsets would SKIP the replay that is the graded behavior); (c)
+state-store width — every query already clones its session at
+shuffle.partitions=8.  Multi-batch replays exist only where the oracle
+grades batch-boundary semantics (late_data's 3-phase watermark eviction,
+dedup_replay's cross-batch state); no phase is removable without
+un-grading the behavior it exists to pin.  Treat ~17s warm (≤ ~30s under
+8-way bench contention) as the documented floor for this suite rather
+than a regression signal.
 
 ROUTED-SINK RE-PROFILE (round 11, 2026-08-15, sf0.1, local[32],
 standalone): cold 11.4s / warm 3.15s, of which 2.33s is the single
@@ -40,7 +49,7 @@ partition-discovered read-back rollup, 0.0s staging (memoized).  The
 remaining candidate from the r10 review — sharing one staged stream +
 session across the routed sink and the outer-attribution pair — was
 checked and declined: the stage dir is ALREADY process-shared
-(_stage_once), a session clone costs ~0 (no JVM spin-up), and the two
+(``stage``), a session clone costs ~0 (no JVM spin-up), and the two
 queries cannot share one STREAM execution without merging two
 independently graded sinks into one lineage (un-grading the per-query
 exactly-once replay each oracle pins).  The 11.4s figure in BENCH_r10
@@ -50,10 +59,16 @@ streaming query runs first, not plan debt.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
+import threading
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from duckdb_cluster_hash_spark.core import DEFAULT_NODES
 from duckdb_cluster_hash_spark.functions.clusterhash import cluster_node_col
@@ -69,11 +84,17 @@ DOCS_STREAM_SCHEMA = "doc_id bigint, text string, ts timestamp"
 __all__ = [
     "EVENTS_SCHEMA",
     "DOCS_STREAM_SCHEMA",
-    "stage_documents_as_stream",
+    "REPLAYS",
+    "REPLAY_TIMEOUT_S",
+    "Replay",
+    "drain",
+    "replay_stream",
+    "run_to_sink",
+    "scratch_dir",
+    "stage",
+    "stage_all",
     "staged_stream_shuffle_partitions",
-    "stage_events_as_stream",
-    "stage_events_three_phase",
-    "stage_events_with_duplicates",
+    "write_event_chunks",
     "read_events_stream",
     "hourly_event_counts",
     "sliding_window_rates",
@@ -208,24 +229,21 @@ def dedup_events_stream(events: DataFrame, watermark: str = "30 minutes") -> Dat
     return events.dropDuplicates(["event_id"])
 
 
-import threading
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """``<tmp>/dch_<name>_<corpus>``: the one naming rule for every
+    per-corpus scratch directory (replay stages, lake-op tables, sinks).
 
-# Staging is once-per-(dir, params) per process and lock-serialized:
-# several catalog queries share one staged replay dir (deliberately —
-# one staging I/O pass serves them all), and two concurrent overwrite
-# writers into the same path race on the _temporary dir (observed as
-# FileNotFoundException under the bench's FAIR pool).
-_STAGE_LOCK = threading.Lock()
-_STAGED: set[tuple] = set()
-
-
-def _stage_once(out_dir: str, params: tuple, write) -> None:
-    key = (os.path.abspath(out_dir),) + params
-    with _STAGE_LOCK:
-        if key in _STAGED:
-            return
-        write()
-        _STAGED.add(key)
+    ``<corpus>`` is the corpus basename made identifier-safe plus 8 hex
+    digits of the sha1 of its ABSOLUTE path: two corpora that share a
+    basename (``a/sf`` and ``b/sf``) must never share a directory, or
+    staging one would overwrite the other's replay while the stage-once
+    memo still marks it done.  The basename of the result is a valid SQL
+    identifier, so callers may use it as a table name.
+    """
+    path = os.path.abspath(sf_dir)
+    base = "".join(c if c.isalnum() else "_" for c in os.path.basename(path))
+    digest = hashlib.sha1(path.encode()).hexdigest()[:8]
+    return os.path.join(tempfile.gettempdir(), f"dch_{name}_{base}_{digest}")
 
 
 def staged_stream_shuffle_partitions(
@@ -262,47 +280,42 @@ def staged_stream_shuffle_partitions(
     return max(1, -(-total // target_bytes))
 
 
-def stage_documents_as_stream(
-    spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 3
-) -> None:
-    """Replay-stage the DOCUMENTS table as ``n_chunks`` single-file
-    parquet chunks for the near-dup ingest stream (DOCS_STREAM_SCHEMA):
-    chunk i carries doc_id % n_chunks == i, so the planted near-dup
-    pairs of the corpus are SPREAD ACROSS micro-batches (contiguous
-    ranges would let most duplicates dedup inside one batch and leave
-    the cross-batch state path untested).
+def _md5_bucket(col: str):
+    """``md5(id)`` digest bucket 0-9 — the oracles' convention
+    ``('0x'||substr(md5(id),1,15))::BIGINT % 10``, so DuckDB can
+    reconstruct exactly which rows a staged delivery carried."""
+    return (
+        F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10)
+        .cast("bigint")
+        % 10
+    )
 
-    The synthetic event time ``ts = 2024-01-01 + (doc_id % 540)
-    seconds`` keeps the whole replay inside a 9-minute span — strictly
-    under the ingest query's 10-minute watermark delay, so no document
-    is ever dropped as LATE and the kept set is exactly one doc per
-    distinct signature (the late-drop path is pinned separately by
-    events_streaming_dedup_replay/late_data, where arrival phases are
-    engineered for it).  Concurrency-safe and idempotent per process.
+
+def _pin_delivery_order(out_dir: str, part: str, n: int) -> None:
+    """Give ``<part>=0..n-1`` one file each, with increasing mtimes.
+
+    The file source orders by modification time; a single job commits
+    all files at ~the same instant, so delivery order is pinned
+    explicitly instead of trusting sub-second mtime accidents.
     """
+    import glob
+    import time
 
-    def write():
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            "text",
-            F.expr(
-                "timestamp'2024-01-01 00:00:00' "
-                "+ make_interval(0, 0, 0, 0, 0, 0, doc_id % 540)"
-            ).alias("ts"),
-        )
-        for i in range(n_chunks):
-            docs.where(F.col("doc_id") % n_chunks == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, f"chunk={i}"))
-
-    _stage_once(out_dir, ("docchunks", sf_dir, n_chunks), write)
+    base = time.time() - 100
+    for i in range(n):
+        files = glob.glob(os.path.join(out_dir, f"{part}={i}", "*.parquet"))
+        if len(files) != 1:
+            raise RuntimeError(
+                f"{part}={i} staged {len(files)} files; expected exactly 1"
+            )
+        os.utime(files[0], (base + i, base + i))
 
 
-def stage_events_as_stream(
+def write_event_chunks(
     spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 4,
     single_file_chunks: bool = True,
 ) -> None:
-    """Replay-stage the batch events table as ``n_chunks`` parquet chunks.
+    """Write the batch events table as ``n_chunks`` parquet chunks.
 
     Chunks are contiguous ``event_id`` ranges, so event time is roughly
     monotone across files (with natural intra-chunk disorder) — a
@@ -311,22 +324,8 @@ def stage_events_as_stream(
     a test keys micro-batches to files via maxFilesPerTrigger); pass
     False when chunk = batch boundary is enough — the write then keeps
     the upstream parallelism instead of funneling through one task.
-
-    Concurrency-safe and idempotent per process (``_stage_once``).
+    The ``events`` replay is the one-chunk, multi-file form.
     """
-    _stage_once(
-        out_dir,
-        ("chunks", sf_dir, n_chunks, single_file_chunks),
-        lambda: _stage_events_as_stream_write(
-            spark, sf_dir, out_dir, n_chunks, single_file_chunks
-        ),
-    )
-
-
-def _stage_events_as_stream_write(
-    spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int,
-    single_file_chunks: bool,
-) -> None:
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(F.min("event_id"), F.max("event_id")).head()
     lo, hi = bounds[0], bounds[1]
@@ -341,26 +340,9 @@ def _stage_events_as_stream_write(
         chunk.write.mode("overwrite").parquet(os.path.join(out_dir, f"chunk={i}"))
 
 
-def stage_events_three_phase(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
-    """Concurrency-safe wrapper around the three-phase staging write
-    (see :func:`_stage_events_three_phase_write`)."""
-    _stage_once(
-        out_dir,
-        ("three_phase", sf_dir),
-        lambda: _stage_events_three_phase_write(spark, sf_dir, out_dir),
-    )
-
-
-def _stage_events_three_phase_write(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
+def _write_three_phase(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Replay-stage events as THREE single-file deliveries — 70% / 10% /
-    20% of the rows, selected by a deterministic md5 bucket of
-    ``event_id`` (the oracles' digest convention,
-    ``('0x'||substr(md5(id),1,15))::BIGINT % 10``), so DuckDB can
-    reconstruct EXACTLY which rows each micro-batch delivered.
+    20% of the rows, selected by the md5 bucket of ``event_id``.
 
     Three phases, not two, because of HOW Spark applies watermarks
     (observed on 4.1, consistent with the two-version watermark design):
@@ -377,16 +359,9 @@ def _stage_events_three_phase_write(
     regeneration).  Files are written in phase order so the file
     source's (mtime, path) ordering replays delivery order.
     """
-    import glob
-    import time
-
     ev = load_table(spark, sf_dir, "events")
     gmax = ev.agg(F.max("ts")).head()[0]
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
+    bucket = _md5_bucket("event_id")
     phase = (
         F.when((bucket < 7) | (F.col("ts") == F.lit(gmax)), 0)
         .when(bucket == 7, 1)
@@ -403,82 +378,185 @@ def _stage_events_three_phase_write(
         .partitionBy("phase")
         .parquet(out_dir)
     )
-    # The file source orders by modification time; a single job commits
-    # all files at ~the same instant, so delivery order is pinned
-    # explicitly instead of trusting sub-second mtime accidents.
-    base = time.time() - 100
-    for p in range(3):
-        files = glob.glob(os.path.join(out_dir, f"phase={p}", "*.parquet"))
-        if len(files) != 1:
-            raise RuntimeError(
-                f"phase={p} staged {len(files)} files; expected exactly 1"
-            )
-        os.utime(files[0], (base + p, base + p))
+    _pin_delivery_order(out_dir, "phase", 3)
 
 
-def stage_events_with_duplicates(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
-    """Concurrency-safe wrapper around the duplicate-redelivery staging
-    write (see :func:`_stage_events_with_duplicates_write`)."""
-    _stage_once(
-        out_dir,
-        ("with_duplicates", sf_dir),
-        lambda: _stage_events_with_duplicates_write(spark, sf_dir, out_dir),
-    )
-
-
-def _stage_events_with_duplicates_write(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
+def _write_duplicates(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Replay-stage events as TWO single-file deliveries: delivery 0 is
     the complete corpus; delivery 1 REDELIVERS ~30% of it (md5 bucket of
-    ``event_id`` < 3 — the oracles' digest convention, so DuckDB can
-    reconstruct the redelivered set exactly), simulating an
-    at-least-once source retrying a partially-acked batch.
+    ``event_id`` < 3), simulating an at-least-once source retrying a
+    partially-acked batch.
 
     Every redelivered row is a byte-identical copy of a delivery-0 row,
     so a correct streaming dedup must reproduce the clean corpus exactly
     — whether a duplicate is absorbed by live state (its ``ts`` is
     within the watermark delay of the max) or dropped by the late-row
     filter (its ``ts`` is older than the post-delivery-0 watermark),
-    the observable output is the same.  File mtimes are pinned so the
-    file source replays delivery order deterministically.
+    the observable output is the same.
     """
-    import glob
-    import time
-
     ev = load_table(spark, sf_dir, "events")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
     ev.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "delivery=0")
     )
-    ev.where(bucket < 3).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "delivery=1")
+    ev.where(_md5_bucket("event_id") < 3).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "delivery=1"))
+    _pin_delivery_order(out_dir, "delivery", 2)
+
+
+def _write_doc_chunks(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+    """Replay-stage the DOCUMENTS table as three single-file parquet
+    chunks for the near-dup ingest streams (DOCS_STREAM_SCHEMA): chunk i
+    carries doc_id % 3 == i, so the planted near-dup pairs of the corpus
+    are SPREAD ACROSS micro-batches (contiguous ranges would let most
+    duplicates dedup inside one batch and leave the cross-batch state
+    path untested).
+
+    The synthetic event time ``ts = 2024-01-01 + (doc_id % 540)
+    seconds`` keeps the whole replay inside a 9-minute span — strictly
+    under the ingest queries' 10-minute watermark delay, so no document
+    is ever dropped as LATE and the kept set is exactly one doc per
+    distinct signature (the late-drop path is pinned separately by
+    events_streaming_dedup_replay/late_data, where arrival phases are
+    engineered for it).
+    """
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "text",
+        F.expr(
+            "timestamp'2024-01-01 00:00:00' "
+            "+ make_interval(0, 0, 0, 0, 0, 0, doc_id % 540)"
+        ).alias("ts"),
     )
-    base = time.time() - 100
-    for d in range(2):
-        files = glob.glob(os.path.join(out_dir, f"delivery={d}", "*.parquet"))
-        if len(files) != 1:
-            raise RuntimeError(
-                f"delivery={d} staged {len(files)} files; expected exactly 1"
-            )
-        os.utime(files[0], (base + d, base + d))
+    for i in range(3):
+        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, f"chunk={i}"))
+
+
+@dataclass(frozen=True)
+class Replay:
+    """One staged replay fixture: the write that stages it, the schema
+    its file-source stream reads, and the files each micro-batch takes
+    (None: every staged file in one batch)."""
+
+    write: Callable[[SparkSession, str, str], None]
+    schema: str
+    files_per_trigger: int | None
+
+
+REPLAYS: dict[str, Replay] = {
+    # one chunk, one micro-batch (hourly, attribution, sessions,
+    # user_totals, outer_attribution, routed_sink)
+    "events": Replay(
+        lambda spark, sf_dir, out_dir: write_event_chunks(
+            spark, sf_dir, out_dir, n_chunks=1, single_file_chunks=False
+        ),
+        EVENTS_SCHEMA,
+        None,
+    ),
+    # 70/10/20 watermark phases (late_data)
+    "three_phase": Replay(_write_three_phase, EVENTS_SCHEMA, 1),
+    # full corpus + 30% redelivery (dedup_replay)
+    "duplicates": Replay(_write_duplicates, EVENTS_SCHEMA, 1),
+    # doc_id % 3 document chunks (neardup_ingest, media_dedup)
+    "docs": Replay(_write_doc_chunks, DOCS_STREAM_SCHEMA, 1),
+}
+
+# Staging is once per stage dir (one per kind and corpus) per process
+# and lock-serialized: several catalog queries share one staged replay dir
+# (one staging I/O pass serves them all), and two concurrent overwrite
+# writers into the same path race on the _temporary dir (observed as
+# FileNotFoundException under the bench's FAIR pool).
+_STAGE_LOCK = threading.Lock()
+_STAGED: set[str] = set()
+
+# The one wait bound for a catalog replay: availableNow drains a finite
+# stage, so a query still running after this is hung, not slow.
+REPLAY_TIMEOUT_S = 300
+
+
+def stage(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """Stage the ``kind`` replay (a key of :data:`REPLAYS`) of corpus
+    ``sf_dir`` into its scratch dir, once per process; returns the dir."""
+    out_dir = scratch_dir(f"stream_{kind}", sf_dir)
+    with _STAGE_LOCK:
+        if out_dir not in _STAGED:
+            REPLAYS[kind].write(spark, sf_dir, out_dir)
+            _STAGED.add(out_dir)
+    return out_dir
+
+
+def stage_all(spark: SparkSession, sf_dir: str) -> None:
+    """Stage every replay in :data:`REPLAYS` for the corpus — the whole
+    fixture set the streaming catalog reads, so a harness can pay the
+    one-time staging I/O off the clock."""
+    for kind in REPLAYS:
+        stage(spark, kind, sf_dir)
+
+
+def _open_stream(
+    spark: SparkSession, schema: str, files_per_trigger: int | None,
+    source_dir: str,
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.option("recursiveFileLookup", "true").parquet(source_dir)
+
+
+def replay_stream(spark: SparkSession, kind: str, sf_dir: str) -> DataFrame:
+    """Stage the ``kind`` replay and open its file-source stream in an
+    isolated session clone (``stream.sparkSession``; shared
+    SparkContext) whose shuffle width — and therefore state-store
+    partition count — is :func:`staged_stream_shuffle_partitions` of
+    the stage, kept off the caller's batch config.
+
+    Default (HDFS-backed) state store: RocksDB measured slower at replay
+    state sizes (plans/r15/isolate_r15_rocksdb_rejected.json); a
+    providerClass set in the SparkContext conf still reaches the clone.
+    """
+    stage_dir = stage(spark, kind, sf_dir)
+    fx = REPLAYS[kind]
+    s2 = spark.newSession()
+    s2.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(staged_stream_shuffle_partitions(stage_dir)),
+    )
+    return _open_stream(s2, fx.schema, fx.files_per_trigger, stage_dir)
+
+
+def drain(handle: StreamingQuery) -> None:
+    """Wait for an ``availableNow`` query to finish; if it is still
+    running after :data:`REPLAY_TIMEOUT_S`, stop it and raise
+    (``awaitTermination`` returns False on timeout instead of raising)."""
+    if not handle.awaitTermination(REPLAY_TIMEOUT_S):
+        handle.stop()
+        raise RuntimeError(
+            f"streaming query {handle.name or handle.id} did not finish "
+            f"in {REPLAY_TIMEOUT_S}s"
+        )
+
+
+def run_to_sink(df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run streaming ``df`` to completion into the memory sink
+    ``dch_stream_<name>`` (``availableNow``, :func:`drain`) and return
+    the sink table."""
+    sink = f"dch_stream_{name}"
+    drain(
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return df.sparkSession.table(sink)
 
 
 def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-source stream over staged event chunks (one file per trigger,
     so multi-batch behavior is exercised even with availableNow)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-    )
+    return _open_stream(spark, EVENTS_SCHEMA, 1, source_dir)
 
 
 def hourly_event_counts(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pytest
 
@@ -8,6 +9,18 @@ from duckdb_cluster_hash_spark.session import start_session
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_MEDIUM = os.environ.get("SPARK_GRAFT_SF_MEDIUM", "/root/testdata/sf0.01")
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _scratch_under_basetemp(tmp_path_factory):
+    """Catalog queries name their per-corpus scratch dirs after the
+    corpus's absolute path (streaming.events.scratch_dir), so every run's
+    fresh pytest-tmp corpora would add new dirs to the system temp dir;
+    keep them under pytest's basetemp, which pytest prunes."""
+    saved = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.getbasetemp())
+    yield
+    tempfile.tempdir = saved
 
 
 @pytest.fixture(scope="session")

@@ -2,7 +2,9 @@
 ``spark`` fixture comes from ``start_session()``, its settings are the
 host-derived ones, no other module builds its own SparkSession, and no
 other engine module reads the environment (so no code path is chosen by
-an environment variable)."""
+an environment variable).  The streaming replay harness
+(duckdb_cluster_hash_spark/streaming/events.py) likewise owns every
+stream wait and the per-corpus scratch-dir naming rule."""
 
 from __future__ import annotations
 
@@ -77,3 +79,34 @@ def test_no_other_module_reads_the_environment():
                 ):
                     found.append(f"{rel}:{node.lineno}")
     assert found == [], f"read deployment settings in session.py only: {found}"
+
+
+# the one place that waits on a stream (under REPLAY_TIMEOUT_S) and that
+# turns a corpus path into a scratch-dir name (scratch_dir)
+REPLAY_HARNESS = os.path.join("duckdb_cluster_hash_spark", "streaming", "events.py")
+REPLAY_IDIOMS = (".awaitTermination(", 'isalnum() else "_"')
+
+
+def _program_sources(root: str):
+    """Relative paths of the package's, bench.py's and scripts/' .py files."""
+    yield "bench.py"
+    for top in ("duckdb_cluster_hash_spark", "scripts"):
+        for dirpath, dirnames, filenames in os.walk(os.path.join(root, top)):
+            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+            for name in filenames:
+                if name.endswith(".py"):
+                    yield os.path.relpath(os.path.join(dirpath, name), root)
+
+
+def test_only_the_replay_harness_waits_on_streams_or_names_scratch_dirs():
+    found = []
+    for rel in _program_sources(ROOT):
+        if rel == REPLAY_HARNESS:
+            continue
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
+            text = fh.read()
+        found += [f"{rel}: {idiom}" for idiom in REPLAY_IDIOMS if idiom in text]
+    assert found == [], (
+        "drain streams with streaming.events.drain / run_to_sink and name "
+        f"per-corpus dirs with streaming.events.scratch_dir: {found}"
+    )

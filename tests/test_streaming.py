@@ -14,7 +14,8 @@ from duckdb_cluster_hash_spark.streaming import (
     read_events_stream,
     route_events_to_nodes,
     sessionize,
-    stage_events_as_stream,
+    stage,
+    write_event_chunks,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -23,7 +24,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def staged(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("events_stream"))
-    stage_events_as_stream(spark, SF, out, n_chunks=4)
+    write_event_chunks(spark, SF, out, n_chunks=4)
     return out
 
 
@@ -257,20 +258,14 @@ def test_stream_stream_interval_join_matches_batch(spark, staged):
     assert dict(per_click) == batch_n
 
 
-def test_three_phase_replay_actually_drops_late_rows(spark, tmp_path):
+def test_three_phase_replay_actually_drops_late_rows(spark):
     """events_streaming_late_data's fixture must exercise the watermark
     DROP path, not just emission: batch 2 (the 20% late delivery) must
     report numRowsDroppedByWatermark > 0, and the emitted windows must
     equal the catalog oracle's reconstruction (checked separately by
     check_oracle); here we pin the mechanism so a corpus or Spark-version
     drift that silently stops dropping fails a unit test, not a grade."""
-    from duckdb_cluster_hash_spark.streaming import (
-        hourly_event_counts,
-        stage_events_three_phase,
-    )
-
-    staged = str(tmp_path / "three_phase")
-    stage_events_three_phase(spark, SF, staged)
+    staged = stage(spark, "three_phase", SF)
     stream = (
         spark.readStream.schema(
             "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -315,8 +310,6 @@ def test_three_phase_staging_routes_argmax_to_phase0(spark, tmp_path):
     assert staging routes it on time."""
     import datetime
 
-    from duckdb_cluster_hash_spark.streaming import stage_events_three_phase
-
     t0 = datetime.datetime(2024, 1, 1)
     rows = [
         # event_id 1 -> bucket 8, carries the max ts
@@ -331,8 +324,7 @@ def test_three_phase_staging_routes_argmax_to_phase0(spark, tmp_path):
         "event_id bigint, ts timestamp, user_id bigint, event_type string, "
         "value double, props string",
     ).write.mode("overwrite").parquet(src + "/events.parquet")
-    staged = str(tmp_path / "drift_staged")
-    stage_events_three_phase(spark, src, staged)
+    staged = stage(spark, "three_phase", src)
     p0_max = spark.read.parquet(staged + "/phase=0").agg(
         F.max("ts")
     ).head()[0]
@@ -343,17 +335,14 @@ def test_three_phase_staging_routes_argmax_to_phase0(spark, tmp_path):
     assert 1 not in p2_ids
 
 
-def test_duplicate_staging_redelivers_md5_bucket_exactly(spark, tmp_path):
-    """stage_events_with_duplicates must write exactly two single-file
+def test_duplicate_staging_redelivers_md5_bucket_exactly(spark):
+    """The ``duplicates`` replay must stage exactly two single-file
     deliveries: the full corpus, then byte-identical copies of exactly
     the md5-bucket<3 rows — the rule the dedup-replay oracle's
     duplicate-blindness relies on."""
     import glob
 
-    from duckdb_cluster_hash_spark.streaming import stage_events_with_duplicates
-
-    out = str(tmp_path / "dup_staged")
-    stage_events_with_duplicates(spark, SF, out)
+    out = stage(spark, "duplicates", SF)
     for d in range(2):
         assert len(glob.glob(out + f"/delivery={d}/*.parquet")) == 1
     full = spark.read.parquet(out + "/delivery=0")
@@ -373,7 +362,7 @@ def test_duplicate_staging_redelivers_md5_bucket_exactly(spark, tmp_path):
     assert want.exceptAll(dups).count() == 0
 
 
-def test_stream_dedup_replay_absorbs_both_duplicate_paths(spark, tmp_path):
+def test_stream_dedup_replay_absorbs_both_duplicate_paths(spark):
     """The two-delivery replay must reproduce the clean corpus whether a
     duplicate is state-deduped (in-window) or late-dropped (older than
     the armed watermark) — count + value-sum equality proves no leak and
@@ -381,14 +370,10 @@ def test_stream_dedup_replay_absorbs_both_duplicate_paths(spark, tmp_path):
     import glob
     import time
 
-    from duckdb_cluster_hash_spark.streaming import (
-        dedup_events_stream,
-        stage_events_with_duplicates,
-    )
+    from duckdb_cluster_hash_spark.streaming import dedup_events_stream
     from duckdb_cluster_hash_spark.streaming.events import EVENTS_SCHEMA
 
-    out = str(tmp_path / "dedup_replay")
-    stage_events_with_duplicates(spark, SF, out)
+    out = stage(spark, "duplicates", SF)
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -530,3 +515,67 @@ def test_media_dedup_ingest_dedups_across_batches(spark, tmp_path):
     )
     out = QUERIES["docs_streaming_media_dedup"](spark, sf).collect()
     assert sum(r["n_kept"] for r in out) == len(set(sig.values()))
+
+
+def _events_corpus(spark, sf_dir, rows):
+    from duckdb_cluster_hash_spark.streaming.events import EVENTS_SCHEMA
+
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(sf_dir, "events.parquet"))
+
+
+def test_same_basename_corpora_stage_separately(spark, tmp_path):
+    """Two corpora named ``sf`` under different parents must not share a
+    replay stage: staging B may not overwrite A's replay, or A's next
+    run (its stage already marked done) would read B's rows."""
+    import datetime
+
+    from duckdb_cluster_hash_spark.plans.catalog import QUERIES
+
+    t0 = datetime.datetime(2024, 1, 1)
+    a, b = str(tmp_path / "a" / "sf"), str(tmp_path / "b" / "sf")
+    _events_corpus(spark, a, [
+        (i, t0 + datetime.timedelta(minutes=i), i, "click", 1.0, "{}")
+        for i in range(10)
+    ])
+    _events_corpus(spark, b, [
+        (i, t0 + datetime.timedelta(hours=5, minutes=i), i, "view", 2.5, "{}")
+        for i in range(7)
+    ])
+
+    def hourly(sf_dir):
+        out = QUERIES["events_streaming_hourly"](spark, sf_dir).collect()
+        return [tuple(r) for r in out]
+
+    first_a, only_b, again_a = hourly(a), hourly(b), hourly(a)
+    assert [r[1:] for r in first_a] == [("click", 10, 10.0)]
+    assert [r[1:] for r in only_b] == [("view", 7, 17.5)]
+    assert only_b[0][0] - first_a[0][0] == 5  # hour buckets
+    assert again_a == first_a
+
+
+def test_stage_all_stages_what_the_streaming_catalog_reads(spark, monkeypatch):
+    """bench.py's prestage calls ``stage_all``; after it, no streaming
+    catalog query may stage anything more (else its staging I/O lands
+    on the clock), and ``stage_all`` writes each replay kind once."""
+    import dataclasses
+
+    from duckdb_cluster_hash_spark.plans.catalog import QUERIES
+    from duckdb_cluster_hash_spark.streaming import events as ev
+
+    writes = []
+    monkeypatch.setattr(ev, "_STAGED", set())
+    for kind, fx in list(ev.REPLAYS.items()):
+        def counted(spark, sf_dir, out_dir, _write=fx.write, _kind=kind):
+            writes.append(_kind)
+            _write(spark, sf_dir, out_dir)
+
+        monkeypatch.setitem(ev.REPLAYS, kind, dataclasses.replace(fx, write=counted))
+    ev.stage_all(spark, SF)
+    assert sorted(writes) == sorted(ev.REPLAYS)
+    streaming = sorted(n for n in QUERIES if "_streaming_" in n)
+    assert len(streaming) == 10
+    for name in streaming:
+        assert QUERIES[name](spark, SF).collect(), name
+    assert sorted(writes) == sorted(ev.REPLAYS), "a query staged after stage_all"

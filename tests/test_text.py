@@ -74,7 +74,7 @@ def test_rolling_hash_deterministic_and_prefix_sensitive(spark):
     df = spark.createDataFrame(
         [("abc",), ("abd",), ("abc",), ("",)], "text string"
     )
-    rows = df.select(tx.rolling_hash_col(F.col("text")).alias("h")).collect()
+    rows = df.select(tx.rolling_hash_pudf()(F.col("text")).alias("h")).collect()
     assert rows[0]["h"] == rows[2]["h"]
     assert rows[0]["h"] != rows[1]["h"]
     assert rows[3]["h"] == 0
