@@ -2,10 +2,12 @@
 """Local replica of the driver's correctness gate.
 
 Runs every ``queries()`` entry on Spark at sf0.01 and the matching
-``oracle_sql()`` in DuckDB over the same parquet, then compares
-row-count, schema (sorted column names), and an order-insensitive
-value comparison (columns sorted by name, rows sorted, values
-normalized).  Usage::
+``oracle_sql()`` in DuckDB over the same parquet, then compares them
+with ``compare``: schema (sorted column names), declared types,
+row-count, and an order-insensitive value comparison (columns sorted
+by name, rows sorted, values normalized).  ``compare`` is the one
+Spark-vs-oracle comparison; the fuzz gate (tests/test_fuzz_oracle.py)
+and the soak (scripts/fuzz_soak.py) call it too.  Usage::
 
     python scripts/check_oracle.py [query_name ...]
 """
@@ -26,11 +28,19 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from duckdb_cluster_hash_spark.session import start_session
+from duckdb_cluster_hash_spark.sources.tables import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+
+
+def create_views(con, sf_dir, tables=TABLES):
+    """One DuckDB view per table over ``sf_dir``: a single ``{t}.parquet``
+    file or a Spark-written ``{t}.parquet/`` directory."""
+    for t in tables:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS FROM read_parquet('{path}')")
 
 
 def norm(v):
@@ -102,6 +112,42 @@ def type_problems(scols, stypes, ocols, otypes):
     return diffs
 
 
+def run_spark(sdf):
+    """``(cols, types, rows)`` of a Spark query, collected."""
+    types = [f.dataType.simpleString() for f in sdf.schema.fields]
+    return sdf.columns, types, [tuple(r) for r in sdf.collect()]
+
+
+def run_oracle(con, sql):
+    """``(cols, types, rows)`` of an oracle query in DuckDB."""
+    rel = con.sql(sql)
+    return [d[0] for d in rel.description], [str(t) for t in rel.types], rel.fetchall()
+
+
+def compare(spark_result, oracle_result):
+    """The problems that make a Spark result differ from its oracle's, in
+    order: sorted column names, declared types, row count, normalized
+    values.  Each result is ``(cols, types, rows)``; ``[]`` means equal."""
+    scols, stypes, srows = spark_result
+    ocols, otypes, orows = oracle_result
+    problems = []
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"schema: spark={sorted(scols)} oracle={sorted(ocols)}")
+    else:
+        tdiffs = type_problems(scols, stypes, ocols, otypes)
+        if tdiffs:
+            problems.append("types differ: " + "; ".join(tdiffs))
+    if len(srows) != len(orows):
+        problems.append(f"rowcount: spark={len(srows)} oracle={len(orows)}")
+    if not problems:
+        a = normalize(srows, scols)
+        b = normalize(orows, ocols)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, first diffs: {diff}")
+    return problems
+
+
 def write_stamp(path, sf_dir, passed, failed):
     """Write the full-run stamp, leaving the file alone (``utc`` included)
     when its counts already match, so a repeat run leaves the tree clean.
@@ -132,10 +178,7 @@ def main(names):
     # an sf0.01 subset check) delete each other's temp files mid-query —
     # observed as a fatal IOException that killed a full sweep.
     con.execute(f"SET temp_directory = '.tmp/duckdb_{os.getpid()}'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    create_views(con, SF_DIR)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -173,51 +216,29 @@ def main(names):
         prev_family = fam(name)
         t0 = time.time()
         try:
-            sdf = qs[name](spark, SF_DIR)
-            scols = sdf.columns
-            stypes = [f.dataType.simpleString() for f in sdf.schema.fields]
-            srows = sdf.collect()
+            result = run_spark(qs[name](spark, SF_DIR))
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark raised {type(exc).__name__}: {exc}")
             failures += 1
             continue
         spark_s = time.time() - t0
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows (spark {spark_s:.1f}s)")
+            print(f"ROWS-ONLY {name}: {len(result[2])} rows (spark {spark_s:.1f}s)")
             continue
         t0 = time.time()
         try:
-            rel = con.sql(oracles[name])
-            ocols = [d[0] for d in rel.description]
-            otypes = [str(t) for t in rel.types]
-            orows = rel.fetchall()
+            expected = run_oracle(con, oracles[name])
             oracle_s = time.time() - t0
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: oracle raised {type(exc).__name__}: {exc}")
             failures += 1
             continue
-        problems = []
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"schema: spark={sorted(scols)} oracle={sorted(ocols)}")
-        else:
-            tdiffs = type_problems(scols, stypes, ocols, otypes)
-            if tdiffs:
-                problems.append("types differ: " + "; ".join(tdiffs))
-        if len(srows) != len(orows):
-            problems.append(f"rowcount: spark={len(srows)} oracle={len(orows)}")
-        if not problems:
-            a = normalize([tuple(r) for r in srows], scols)
-            b = normalize(orows, ocols)
-            if a != b:
-                diff = [
-                    (x, y) for x, y in zip(a, b) if x != y
-                ][:3]
-                problems.append(f"values differ, first diffs: {diff}")
+        problems = compare(result, expected)
         if problems:
             failures += 1
             print(f"FAIL {name}: " + "; ".join(problems))
         else:
-            print(f"OK   {name}: {len(srows)} rows "
+            print(f"OK   {name}: {len(result[2])} rows "
                   f"(spark {spark_s:.1f}s, oracle {oracle_s:.1f}s)")
     freed_total += clear_shared_cache()
     print(f"\n{len(selected) - failures}/{len(selected)} passed "

@@ -38,9 +38,6 @@ sys.path.insert(0, ROOT)
 import duckdb  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.1")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def main(names: list[str]) -> int:
@@ -49,15 +46,13 @@ def main(names: list[str]) -> int:
     load1, _, noisy = bench.wait_for_calm()
 
     import __spark_entry__ as entrymod
+    from check_oracle import create_views
 
     oracles = entrymod.oracle_sql()
     selected = names or sorted(oracles)
     con = duckdb.connect()
     con.execute(f"SET temp_directory = '.tmp/duckdb_{os.getpid()}'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    create_views(con, SF_DIR)
     per_query: dict[str, float] = {}
     for i, name in enumerate(selected, 1):
         t0 = time.time()

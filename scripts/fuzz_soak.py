@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """Extended differential-fuzz soak: the test-suite fuzz gate
-(tests/test_fuzz_oracle.py) pins two seeds so the suite stays fast; this
-script sweeps MANY seeded random corpora/event logs through the same
-Spark-vs-DuckDB comparison to hunt rare data-dependent divergences
-(tie-breaks, duplicate collapse, boundary counts) before a driver round
-trips over one.
+(tests/test_fuzz_oracle.py) pins one or two seeds per family so the suite
+stays fast; this script sweeps MANY seeds through every family of its
+``FAMILIES`` table, with the same Spark-vs-DuckDB ``compare``, to hunt
+rare data-dependent divergences (tie-breaks, duplicate collapse,
+boundary counts) before a driver round trips over one.
 
     python scripts/fuzz_soak.py [n_seeds] [start_seed]   # default 8 from 100
 
-Exit code != 0 on any mismatch; prints one line per (seed, family).
+Exit code != 0 on any mismatch; prints one line per seed and stamps SOAK.md.
 """
 
 from __future__ import annotations
@@ -16,8 +16,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-
-import duckdb
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -25,42 +24,9 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tests"))
 sys.path.insert(0, HERE)
 
-from check_oracle import normalize  # noqa: E402
 import test_fuzz_oracle as tf  # noqa: E402
 
-from duckdb_cluster_hash_spark.operators import dedup  # noqa: E402
-from duckdb_cluster_hash_spark.operators.ranking import release_rank_pins  # noqa: E402
-from duckdb_cluster_hash_spark.plans.catalog import ORACLES, QUERIES  # noqa: E402
 from duckdb_cluster_hash_spark.session import start_session  # noqa: E402
-
-
-def _run_family(spark, sf_dir, con, names, seed, label):
-    bad = []
-    for name in names:
-        try:
-            sdf = QUERIES[name](spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            rel = con.sql(ORACLES[name])
-            ocols = [d[0] for d in rel.description]
-            orows = rel.fetchall()
-            ok = (
-                sorted(scols) == sorted(ocols)
-                and len(srows) == len(orows)
-                and normalize(srows, scols) == normalize(orows, ocols)
-            )
-        except Exception as exc:  # a crash is a finding, not an abort
-            print(f"ERR  seed={seed} {label} {name}: {exc}", flush=True)
-            bad.append(name)
-            continue
-        if not ok:
-            print(
-                f"DIFF seed={seed} {label} {name}: "
-                f"{len(srows)} spark vs {len(orows)} oracle rows",
-                flush=True,
-            )
-            bad.append(name)
-    return bad
 
 
 def _stamp_soak_md(
@@ -69,20 +35,19 @@ def _stamp_soak_md(
     """Durable round artifact: SOAK.md with the per-seed tallies (the
     stdout log is ephemeral; the committed stamp is what the next round
     reads)."""
-    import time
-
-    nd = len(tf.FUZZ_QUERIES)
-    ne = len(tf.EVENTS_FUZZ_QUERIES)
+    counts = {family: len(spec.queries) for family, spec in tf.FAMILIES.items()}
+    per_corpus = sum(counts.values())
+    terms = " + ".join(f"{n} {family}" for family, n in counts.items())
     with open(os.path.join(ROOT, "SOAK.md"), "w") as fh:
         fh.write("# SOAK — differential-fuzz sweep result\n\n")
         fh.write(
-            f"`python scripts/fuzz_soak.py {n_seeds} {start}` — {n_seeds} "
-            "seeded random corpora\n(documents + events families, seeds "
-            f"{start}-{start + n_seeds - 1}), every documents-only\nand "
-            "events-only catalog query vs its DuckDB oracle with the\n"
-            f"driver's normalization: {n_seeds} x ({nd} docs + {ne} events) "
-            f"= {n_seeds * (nd + ne)}\nquery-level comparisons, "
-            f"{len(failures)} divergences.\n\n```\n"
+            f"`python scripts/fuzz_soak.py {n_seeds} {start}` — seeds "
+            f"{start}-{start + n_seeds - 1}, each run through every fuzz family\n"
+            f"({', '.join(counts)}): every fuzzed catalog query vs its DuckDB\n"
+            "oracle with check_oracle's `compare` (columns, declared types, row\n"
+            f"count, normalized values): {n_seeds} x ({terms})\n"
+            f"= {n_seeds} x {per_corpus} = {n_seeds * per_corpus} query-level "
+            f"comparisons, {len(failures)} divergences.\n\n```\n"
         )
         fh.write("\n".join(per_seed) + "\n```\n\n")
         if failures:
@@ -98,63 +63,40 @@ def main(n_seeds: int, start: int = 100) -> int:
     spark = start_session()
     failures: list[tuple[int, str, str]] = []
     per_seed: list[str] = []
-    for seed in range(start, start + n_seeds):
-        with tempfile.TemporaryDirectory(prefix=f"soak{seed}-") as sf_dir:
-            docs = spark.createDataFrame(
-                tf._make_corpus(seed),
-                "doc_id bigint, text string, lang string, source string, "
-                "n_chars bigint",
-            )
-            docs.coalesce(2).write.mode("overwrite").parquet(
-                f"{sf_dir}/documents.parquet"
-            )
-            ev = spark.createDataFrame(
-                tf._make_events(seed),
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string, value double, props string",
-            )
-            ev.coalesce(2).write.mode("overwrite").parquet(
-                f"{sf_dir}/events.parquet"
-            )
-            con = duckdb.connect()
-            con.execute(
-                "CREATE VIEW documents AS FROM "
-                f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-            )
-            con.execute(
-                "CREATE VIEW events AS FROM "
-                f"read_parquet('{sf_dir}/events.parquet/*.parquet')"
-            )
-            dedup.clear_shared_cache()
-            release_rank_pins()
-            bad_d = _run_family(
-                spark, sf_dir, con, tf.FUZZ_QUERIES, seed, "docs"
-            )
-            bad_e = _run_family(
-                spark, sf_dir, con, tf.EVENTS_FUZZ_QUERIES, seed, "events"
-            )
-            con.close()
-            dedup.clear_shared_cache()
-            release_rank_pins()
-            failures += [(seed, "docs", n) for n in bad_d]
-            failures += [(seed, "events", n) for n in bad_e]
-            line = (
-                f"seed {seed}: docs {len(tf.FUZZ_QUERIES) - len(bad_d)}/"
-                f"{len(tf.FUZZ_QUERIES)}, events "
-                f"{len(tf.EVENTS_FUZZ_QUERIES) - len(bad_e)}/"
-                f"{len(tf.EVENTS_FUZZ_QUERIES)} ok"
-            )
-            per_seed.append(line)
-            print(line, flush=True)
+    saved_tempdir = tempfile.tempdir
+    # per-corpus scratch dirs (streaming.events.scratch_dir) die with the run
+    with tempfile.TemporaryDirectory(prefix="soak-") as root:
+        tempfile.tempdir = root
+        try:
+            for seed in range(start, start + n_seeds):
+                tallies = []
+                for family, spec in tf.FAMILIES.items():
+                    sf_dir = tempfile.mkdtemp(prefix=f"{family}{seed}-")
+                    bad = []
+                    with tf.fuzz_corpus(spark, sf_dir, family, seed) as con:
+                        for name in spec.queries:
+                            try:
+                                problems = tf.divergences(spark, sf_dir, con, name)
+                            except Exception as exc:  # a crash is a finding, not an abort
+                                problems = [f"raised {type(exc).__name__}: {exc}"]
+                            if problems:
+                                print(f"DIFF seed={seed} {family} {name}: "
+                                      + "; ".join(problems), flush=True)
+                                bad.append(name)
+                    failures += [(seed, family, n) for n in bad]
+                    n = len(spec.queries)
+                    tallies.append(f"{family} {n - len(bad)}/{n}")
+                per_seed.append(f"seed {seed}: " + ", ".join(tallies) + " ok")
+                print(per_seed[-1], flush=True)
+        finally:
+            tempfile.tempdir = saved_tempdir
     if failures:
         per_seed.append(f"{len(failures)} divergences: {failures}")
-        print(per_seed[-1])
-        _stamp_soak_md(n_seeds, start, per_seed, failures)
-        return 1
-    per_seed.append(f"all seeds clean ({n_seeds} corpora x both families)")
+    else:
+        per_seed.append(f"all seeds clean ({n_seeds} seeds x every family)")
     print(per_seed[-1])
     _stamp_soak_md(n_seeds, start, per_seed, failures)
-    return 0
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -1,25 +1,30 @@
-"""Differential fuzz gate: Spark vs DuckDB on RANDOM documents corpora.
+"""Differential fuzz gate: Spark vs DuckDB on seeded RANDOM corpora.
 
 The oracle gate (scripts/check_oracle.py, mirrored from the driver) only
 ever runs on the fixed testdata; a data-dependent divergence — tie-breaks,
 duplicate collapse, empty strings, boundary counts — can hide behind one
-lucky dataset.  This module regenerates a small seeded corpus engineered
-for those edges (exact duplicates, near-duplicates, repeated-letter words,
-ties in frequency, empty text, a deliberate n_chars violation) and runs
-every documents-only catalog query against its DuckDB oracle with the
-same normalization the driver uses.
+lucky dataset.  ``FAMILIES`` is the one table of fuzz families: each
+regenerates small seeded tables engineered for those edges and runs its
+catalog queries against their DuckDB oracles through check_oracle's
+``compare`` (columns, declared types, row count, normalized values).
+scripts/fuzz_soak.py sweeps the same table over many more seeds.
 
 Kept in-distribution on purpose: ASCII text, valid 2-char langs, non-null
 columns — the contract is the driver's testdata shape, and fuzzing
-outside it would only manufacture out-of-contract noise.
+outside it would only manufacture out-of-contract noise.  Every catalog
+query is in exactly one family or in ``UNFUZZED`` with its reason.
 """
 
 from __future__ import annotations
 
+import contextlib
+import datetime as dt
 import os
 import random
 import re
 import sys
+from dataclasses import dataclass
+from typing import Callable
 
 import duckdb
 import pytest
@@ -27,33 +32,77 @@ import pytest
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
-from check_oracle import normalize  # noqa: E402  (driver-mirroring comparison)
+from check_oracle import compare, create_views, run_oracle, run_spark  # noqa: E402
 
+from duckdb_cluster_hash_spark.operators import dedup  # noqa: E402
+from duckdb_cluster_hash_spark.operators.ranking import release_rank_pins  # noqa: E402
 from duckdb_cluster_hash_spark.plans.catalog import ORACLES, QUERIES  # noqa: E402
 
-_OTHER_TABLES = re.compile(
-    r"\b(region|nation|customer|supplier|part|orders|lineitem|events|embeddings)\b",
-    re.I,
+_TABLE_FREE = "reads no table: data-independent, so a random corpus adds nothing"
+_TRAINER = (
+    "iterated trainer (16 BPE merges / the 140-CTE unrolled unigram oracle): "
+    "dedicated tiny-corpus + independent-reference tests; too slow per seed"
 )
-# iterated trainers (16 BPE merges; the unigram trainer's 140-CTE
-# unrolled oracle) have dedicated tiny-corpus + independent-reference
-# tests and are too slow to re-run per fuzz seed
-_SKIP = {
-    "docs_bpe_training_loop",
-    "docs_bpe_encode",
-    "docs_unigram_lm_train",
-    "docs_unigram_lm_encode",
+_DOCS_STREAM = (
+    "micro-batch replay of documents: dedicated tests in test_streaming.py; "
+    "too slow to replay per seed"
+)
+_RECALL = (
+    "recall-floor contract tuned to the testdata's Gaussian vectors: random "
+    "vectors can miss the floor without an engine bug"
+)
+UNFUZZED = {
+    "cluster_resharding_plan": _TABLE_FREE,
+    "cluster_shard_ranges": _TABLE_FREE,
+    "cluster_user_keys_histogram": _TABLE_FREE,
+    "ddl_ctas_distribution": _TABLE_FREE,
+    "ddl_readme_flow": _TABLE_FREE,
+    "sql_error_probe": _TABLE_FREE,
+    "docs_bpe_training_loop": _TRAINER,
+    "docs_bpe_encode": _TRAINER,
+    "docs_unigram_lm_train": _TRAINER,
+    "docs_unigram_lm_encode": _TRAINER,
+    "docs_streaming_media_dedup": _DOCS_STREAM,
+    "docs_streaming_neardup_ingest": _DOCS_STREAM,
+    "emb_ivf_kmeans_recall": _RECALL,
+    "emb_lsh_ann_recall": _RECALL,
+    "emb_pq_adc_recall": _RECALL,
+    "emb_matryoshka_recall": _RECALL,
+    "emb_binary_hamming_recall": _RECALL,
 }
 
-FUZZ_QUERIES = sorted(
-    n
-    for n, sql in ORACLES.items()
-    if n.startswith("docs_")
-    and "_streaming_" not in n  # real micro-batch engine: dedicated
-    # tests + temp stage dirs per corpus; too slow to replay per seed
-    and not _OTHER_TABLES.search(sql)
-    and n not in _SKIP
+# Cross-family joins and file-format round-trips: every table at once.
+MIXED_QUERIES = [
+    "cluster_node_arity_sweep",      # events
+    "events_enriched_by_segment",    # customer x events
+    "docs_hybrid_rrf_search",        # documents x embeddings
+    "formats_csv_roundtrip",
+    "formats_json_roundtrip",
+    "formats_orc_roundtrip",
+    "formats_text_roundtrip",
+    "formats_schema_evolution",
+    "formats_partitioned_overwrite",
+    "formats_compaction",
+    "formats_merge_on_read",
+]
+
+_TABLE_RE = re.compile(
+    r"\b(region|nation|customer|supplier|part|orders|lineitem|events|documents|embeddings)\b",
+    re.I,
 )
+_STAR = {"region", "nation", "customer", "supplier", "part", "orders", "lineitem"}
+
+
+def _queries(rule: Callable[[str, set[str]], bool]) -> list[str]:
+    """Catalog queries whose name and oracle tables satisfy ``rule``."""
+    return sorted(
+        n
+        for n, sql in ORACLES.items()
+        if n not in UNFUZZED
+        and n not in MIXED_QUERIES
+        and rule(n, {t.lower() for t in _TABLE_RE.findall(sql)})
+    )
+
 
 _VOCAB = (
     "aa ab abab banana band data dataset deep deduplication learning "
@@ -62,7 +111,7 @@ _VOCAB = (
 ).split()
 
 
-def _make_corpus(seed: int):
+def _documents(seed: int, n_files: int = 2):
     rng = random.Random(seed)
     rows = []
     texts = []
@@ -84,71 +133,11 @@ def _make_corpus(seed: int):
         if i == 17:
             n_chars += 3  # one deliberate constraint violation
         rows.append((i, text, lang, source, n_chars))
-    return rows
+    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    return {"documents": (rows, schema, n_files)}
 
 
-@pytest.fixture(scope="module", params=[11, 29])
-def fuzz_dir(request, spark, tmp_path_factory):
-    seed = request.param
-    sf_dir = str(tmp_path_factory.mktemp(f"fuzz{seed}"))
-    df = spark.createDataFrame(
-        _make_corpus(seed),
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    )
-    df.coalesce(2).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
-    yield sf_dir
-    from duckdb_cluster_hash_spark.operators import dedup
-
-    dedup.clear_shared_cache()  # per-corpus memos die with the corpus
-
-
-@pytest.fixture(scope="module")
-def fuzz_con(fuzz_dir):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS FROM "
-        f"read_parquet('{fuzz_dir}/documents.parquet/*.parquet')"
-    )
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", FUZZ_QUERIES)
-def test_docs_query_matches_oracle_on_fuzz_corpus(spark, fuzz_dir, fuzz_con, name):
-    sdf = QUERIES[name](spark, fuzz_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = fuzz_con.sql(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows), f"{name}: {len(srows)} vs {len(orows)}"
-    assert normalize(srows, scols) == normalize(orows, ocols)
-
-
-# ---------------------------------------------------------------------------
-# Events family — same differential gate over a random event log
-# ---------------------------------------------------------------------------
-
-_EVENTS_SKIP_PREFIX = "events_streaming_"  # real micro-batch engine: has its
-# own dedicated tests; too slow to replay per fuzz seed
-
-EVENTS_FUZZ_QUERIES = sorted(
-    n
-    for n, sql in ORACLES.items()
-    if n.startswith("events_")
-    and not n.startswith(_EVENTS_SKIP_PREFIX)
-    and not re.search(
-        r"\b(region|nation|customer|supplier|part|orders|lineitem|documents|embeddings)\b",
-        sql,
-        re.I,
-    )
-)
-
-
-def _make_events(seed: int):
-    import datetime as dt
-
+def _events(seed: int):
     rng = random.Random(seed)
     t0 = dt.datetime(2024, 1, 1)
     rows = []
@@ -162,73 +151,19 @@ def _make_events(seed: int):
         value = round(rng.uniform(0.01, 500.0), 2)
         props = '{"k": %d}' % rng.randint(0, 99)
         rows.append((i, ts, user, etype, value, props))
-    return rows
-
-
-@pytest.fixture(scope="module", params=[7])
-def fuzz_events_dir(request, spark, tmp_path_factory):
-    seed = request.param
-    sf_dir = str(tmp_path_factory.mktemp(f"fuzzev{seed}"))
-    df = spark.createDataFrame(
-        _make_events(seed),
+    schema = (
         "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string",
+        "value double, props string"
     )
-    df.coalesce(2).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
-    return sf_dir
+    return {"events": (rows, schema, 2)}
 
 
-@pytest.fixture(scope="module")
-def fuzz_events_con(fuzz_events_dir):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS FROM "
-        f"read_parquet('{fuzz_events_dir}/events.parquet/*.parquet')"
-    )
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", EVENTS_FUZZ_QUERIES)
-def test_events_query_matches_oracle_on_fuzz_corpus(
-    spark, fuzz_events_dir, fuzz_events_con, name
-):
-    sdf = QUERIES[name](spark, fuzz_events_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = fuzz_events_con.sql(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows), f"{name}: {len(srows)} vs {len(orows)}"
-    assert normalize(srows, scols) == normalize(orows, ocols)
-
-
-# ---------------------------------------------------------------------------
-# Star schema (TPC-H-ish) — the DECIMAL money path and rank/tie machinery
-# ---------------------------------------------------------------------------
-
-_STAR = re.compile(r"\b(region|nation|customer|supplier|part|orders|lineitem)\b", re.I)
-_NONSTAR = re.compile(r"\b(events|documents|embeddings)\b", re.I)
-
-STAR_FUZZ_QUERIES = sorted(
-    n
-    for n, sql in ORACLES.items()
-    if _STAR.search(sql)
-    and not _NONSTAR.search(sql)
-    # file-format round-trips exercise IO mechanics, not data semantics
-    and not n.startswith("formats_")
-)
-
-
-def _make_star(seed: int):
+def _star(seed: int):
     """Mini star schema mirroring the testdata's synthetic conventions:
     NATION_n names, Customer#%09d keys, Brand#1..25, cent-grid discounts,
     integer-valued double quantities, midnight TIMESTAMP dates — plus
     deliberate edge salt: FK orphans (the audit must COUNT them
     identically), childless orders, and heavy key ties."""
-    import datetime as dt
-
     rng = random.Random(seed)
     day = lambda y, m, d: dt.datetime(y, m, d)  # noqa: E731
     region = [(i, n) for i, n in enumerate(
@@ -284,87 +219,30 @@ def _make_star(seed: int):
         (11, 0, 900, 99, 3.0, 2900.33, 0.1, 0.08, "R", "F", day(1999, 6, 3)),
     ]
     return {
-        "region": (region, "r_regionkey int, r_name string"),
-        "nation": (nation, "n_nationkey int, n_name string, n_regionkey int"),
+        "region": (region, "r_regionkey int, r_name string", 1),
+        "nation": (nation, "n_nationkey int, n_name string, n_regionkey int", 1),
         "customer": (customer,
                      "c_custkey bigint, c_name string, c_nationkey int, "
-                     "c_acctbal double, c_mktsegment string"),
+                     "c_acctbal double, c_mktsegment string", 1),
         "supplier": (supplier,
-                     "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double"),
+                     "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+                     1),
         "part": (part,
                  "p_partkey bigint, p_name string, p_brand string, p_type string, "
-                 "p_size int, p_retailprice double"),
+                 "p_size int, p_retailprice double", 1),
         "orders": (orders,
                    "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-                   "o_totalprice double, o_orderdate timestamp, o_orderpriority string"),
+                   "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+                   1),
         "lineitem": (lineitem,
                      "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
                      "l_linenumber int, l_quantity double, l_extendedprice double, "
                      "l_discount double, l_tax double, l_returnflag string, "
-                     "l_linestatus string, l_shipdate timestamp"),
+                     "l_linestatus string, l_shipdate timestamp", 1),
     }
 
 
-@pytest.fixture(scope="module", params=[13])
-def fuzz_star_dir(request, spark, tmp_path_factory):
-    seed = request.param
-    sf_dir = str(tmp_path_factory.mktemp(f"fuzzstar{seed}"))
-    for t, (rows, schema) in _make_star(seed).items():
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{sf_dir}/{t}.parquet")
-    return sf_dir
-
-
-@pytest.fixture(scope="module")
-def fuzz_star_con(fuzz_star_dir):
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]:
-        con.execute(
-            f"CREATE VIEW {t} AS FROM "
-            f"read_parquet('{fuzz_star_dir}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAR_FUZZ_QUERIES)
-def test_star_query_matches_oracle_on_fuzz_corpus(
-    spark, fuzz_star_dir, fuzz_star_con, name
-):
-    sdf = QUERIES[name](spark, fuzz_star_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = fuzz_star_con.sql(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows), f"{name}: {len(srows)} vs {len(orows)}"
-    assert normalize(srows, scols) == normalize(orows, ocols)
-
-
-# ---------------------------------------------------------------------------
-# Embeddings — exact / md5-deterministic queries only.  The *_recall
-# contract oracles (IVF, LSH, PQ, Matryoshka, Hamming) are tuned to the
-# testdata's Gaussian distribution: adversarial random vectors could miss
-# a recall floor without any engine bug, so fuzzing them would only
-# manufacture out-of-contract noise.
-# ---------------------------------------------------------------------------
-
-EMB_FUZZ_QUERIES = sorted(
-    n
-    for n, sql in ORACLES.items()
-    if n.startswith("emb_")
-    and not n.endswith("_recall")
-    and not re.search(
-        r"\b(region|nation|customer|supplier|part|orders|lineitem|events|documents)\b",
-        sql,
-        re.I,
-    )
-)
-
-
-def _make_embeddings(seed: int):
+def _embeddings(seed: int):
     rng = random.Random(seed)
     rows = []
     prev = None
@@ -379,177 +257,95 @@ def _make_embeddings(seed: int):
                 emb[0] = 1 / 1024  # keep norms nonzero (in-distribution)
         prev = emb
         rows.append((i, emb, rng.randrange(10)))
-    return rows
+    return {"embeddings": (rows, "vec_id bigint, embedding array<float>, label int", 1)}
 
 
-@pytest.fixture(scope="module", params=[17])
-def fuzz_emb_dir(request, spark, tmp_path_factory):
-    seed = request.param
-    sf_dir = str(tmp_path_factory.mktemp(f"fuzzemb{seed}"))
-    df = spark.createDataFrame(
-        _make_embeddings(seed), "vec_id bigint, embedding array<float>, label int"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet")
-    yield sf_dir
-    from duckdb_cluster_hash_spark.operators import dedup
-
-    dedup.clear_shared_cache()
+def _mixed(seed: int):
+    return {**_documents(seed, n_files=1), **_events(seed), **_embeddings(seed), **_star(seed)}
 
 
-@pytest.fixture(scope="module")
-def fuzz_emb_con(fuzz_emb_dir):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS FROM "
-        f"read_parquet('{fuzz_emb_dir}/embeddings.parquet/*.parquet')"
-    )
-    yield con
-    con.close()
+@dataclass(frozen=True)
+class Family:
+    seeds: tuple[int, ...]  # the pytest seeds; the soak sweeps its own
+    tables: Callable[[int], dict]  # seed -> {table: (rows, schema, n_files)}
+    queries: list[str]
 
 
-@pytest.mark.parametrize("name", EMB_FUZZ_QUERIES)
-def test_emb_query_matches_oracle_on_fuzz_corpus(
-    spark, fuzz_emb_dir, fuzz_emb_con, name
-):
-    sdf = QUERIES[name](spark, fuzz_emb_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = fuzz_emb_con.sql(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows), f"{name}: {len(srows)} vs {len(orows)}"
-    assert normalize(srows, scols) == normalize(orows, ocols)
+FAMILIES = {
+    "docs": Family((11, 29), _documents, _queries(
+        lambda n, t: n.startswith("docs_") and t <= {"documents"})),
+    "events": Family((7,), _events, _queries(
+        lambda n, t: n.startswith("events_") and not n.startswith("events_streaming_")
+        and t <= {"events"})),
+    # the DECIMAL money path and the rank/tie machinery
+    "star": Family((13,), _star, _queries(lambda n, t: bool(t) and t <= _STAR)),
+    "emb": Family((17,), _embeddings, _queries(
+        lambda n, t: n.startswith("emb_") and t <= {"embeddings"})),
+    # TRUE streaming: the whole micro-batch replay (staging, watermarks,
+    # stateful operators) against the batch-equivalent oracles, which
+    # encode Spark's eviction semantics (one-batch-behind watermark,
+    # per-leg watermark minimum, trailing no-data batch)
+    "streaming": Family((23,), _events, _queries(
+        lambda n, t: n.startswith("events_streaming_"))),
+    "mixed": Family((31,), _mixed, MIXED_QUERIES),
+}
 
 
-# ---------------------------------------------------------------------------
-# TRUE streaming — the whole micro-batch replay (staging, watermarks,
-# stateful operators) against the batch-equivalent oracles on a random
-# event log.  The subtlest cross-engine machinery in the repo: the
-# oracles encode Spark's actual eviction semantics (one-batch-behind
-# watermark, per-leg watermark minimum, trailing no-data batch), and
-# this gate proves those encodings are data-general, not tuned to the
-# fixed testdata.  One seed: each query spins a real streaming engine.
-# ---------------------------------------------------------------------------
-
-STREAMING_FUZZ_QUERIES = sorted(
-    n for n in ORACLES if n.startswith("events_streaming_")
-)
-
-
-@pytest.fixture(scope="module", params=[23])
-def fuzz_stream_dir(request, spark, tmp_path_factory):
-    seed = request.param
-    sf_dir = str(tmp_path_factory.mktemp(f"fuzzstream{seed}"))
-    df = spark.createDataFrame(
-        _make_events(seed),
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string",
-    )
-    df.coalesce(2).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
-    return sf_dir
-
-
-@pytest.fixture(scope="module")
-def fuzz_stream_con(fuzz_stream_dir):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS FROM "
-        f"read_parquet('{fuzz_stream_dir}/events.parquet/*.parquet')"
-    )
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STREAMING_FUZZ_QUERIES)
-def test_streaming_query_matches_oracle_on_fuzz_corpus(
-    spark, fuzz_stream_dir, fuzz_stream_con, name
-):
-    sdf = QUERIES[name](spark, fuzz_stream_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = fuzz_stream_con.sql(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows), f"{name}: {len(srows)} vs {len(orows)}"
-    assert normalize(srows, scols) == normalize(orows, ocols)
-
-
-# ---------------------------------------------------------------------------
-# Mixed corpus — cross-family joins and file-format round-trips.  With
-# this, every catalog query is fuzz-covered except: table-free probes
-# (data-independent by construction), the *_recall contracts (tuned to
-# the testdata distribution), and the two 16-iteration BPE trainers
-# (dedicated tiny-corpus oracle tests).
-# ---------------------------------------------------------------------------
-
-MIXED_FUZZ_QUERIES = [
-    "cluster_node_arity_sweep",      # events
-    "events_enriched_by_segment",    # customer x events
-    "docs_hybrid_rrf_search",        # documents x embeddings
-    "formats_csv_roundtrip",
-    "formats_json_roundtrip",
-    "formats_orc_roundtrip",
-    "formats_text_roundtrip",
-    "formats_schema_evolution",
-    "formats_partitioned_overwrite",
-    "formats_compaction",
-    "formats_merge_on_read",
-]
-
-
-@pytest.fixture(scope="module", params=[31])
-def fuzz_mixed_dir(request, spark, tmp_path_factory):
-    seed = request.param
-    sf_dir = str(tmp_path_factory.mktemp(f"fuzzmix{seed}"))
-    spark.createDataFrame(
-        _make_corpus(seed),
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
-    spark.createDataFrame(
-        _make_events(seed),
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string",
-    ).coalesce(2).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
-    spark.createDataFrame(
-        _make_embeddings(seed), "vec_id bigint, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet")
-    for t, (rows, schema) in _make_star(seed).items():
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+@contextlib.contextmanager
+def fuzz_corpus(spark, sf_dir: str, family: str, seed: int):
+    """Write ``family``'s tables for ``seed`` under ``sf_dir`` and yield a
+    DuckDB connection with views over exactly those tables; per-corpus
+    memos and rank pins die with the corpus."""
+    tables = FAMILIES[family].tables(seed)
+    for t, (rows, schema, n_files) in tables.items():
+        spark.createDataFrame(rows, schema).coalesce(n_files).write.mode(
             "overwrite"
         ).parquet(f"{sf_dir}/{t}.parquet")
-    yield sf_dir
-    from duckdb_cluster_hash_spark.operators import dedup
+    con = duckdb.connect()
+    try:
+        create_views(con, sf_dir, tables)
+        yield con
+    finally:
+        con.close()
+        dedup.clear_shared_cache()
+        release_rank_pins()
 
-    dedup.clear_shared_cache()
+
+def divergences(spark, sf_dir: str, con, name: str) -> list[str]:
+    """``compare`` of one catalog query on a fuzz corpus with its oracle."""
+    return compare(run_spark(QUERIES[name](spark, sf_dir)), run_oracle(con, ORACLES[name]))
 
 
 @pytest.fixture(scope="module")
-def fuzz_mixed_con(fuzz_mixed_dir):
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS FROM "
-            f"read_parquet('{fuzz_mixed_dir}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
+def corpus(request, spark, tmp_path_factory):
+    family, seed = request.param
+    sf_dir = str(tmp_path_factory.mktemp(f"fuzz_{family}{seed}"))
+    with fuzz_corpus(spark, sf_dir, family, seed) as con:
+        yield sf_dir, con
 
 
-@pytest.mark.parametrize("name", MIXED_FUZZ_QUERIES)
-def test_mixed_query_matches_oracle_on_fuzz_corpus(
-    spark, fuzz_mixed_dir, fuzz_mixed_con, name
-):
-    sdf = QUERIES[name](spark, fuzz_mixed_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = fuzz_mixed_con.sql(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows), f"{name}: {len(srows)} vs {len(orows)}"
-    assert normalize(srows, scols) == normalize(orows, ocols)
+def _family_test(family: str):
+    spec = FAMILIES[family]
+
+    @pytest.mark.parametrize("name", spec.queries)
+    @pytest.mark.parametrize(
+        "corpus", [(family, s) for s in spec.seeds], ids=lambda p: str(p[1]), indirect=True
+    )
+    def test(spark, corpus, name):
+        problems = divergences(spark, *corpus, name)
+        assert not problems, f"{name}: " + "; ".join(problems)
+
+    return test
+
+
+# one test per family, so each case keeps its per-family ID:
+# test_<family>_query_matches_oracle_on_fuzz_corpus[<seed>-<query>]
+for _family in FAMILIES:
+    globals()[f"test_{_family}_query_matches_oracle_on_fuzz_corpus"] = _family_test(_family)
+
+
+def test_every_query_is_fuzzed_or_has_a_reason():
+    """Each catalog query is in exactly one family or in ``UNFUZZED``,
+    so a new query cannot skip the fuzz gate silently."""
+    homes = [n for spec in FAMILIES.values() for n in spec.queries] + list(UNFUZZED)
+    assert sorted(homes) == sorted(ORACLES)

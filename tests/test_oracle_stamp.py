@@ -36,3 +36,6 @@ def test_changed_count_rewrites_stamp(tmp_path):
 def test_perfbench_imports_stay():
     assert callable(check_oracle.normalize)
     assert callable(check_oracle.type_problems)
+    assert list(check_oracle.TABLES) == (
+        "region nation customer supplier part orders lineitem events documents embeddings"
+    ).split()
