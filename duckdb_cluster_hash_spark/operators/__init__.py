@@ -1,5 +1,4 @@
 from duckdb_cluster_hash_spark.operators.dedup import (  # noqa: F401
-    exact_dedup,
     dedup_representatives,
     word_ngrams,
     shingle_table,
@@ -29,8 +28,6 @@ from duckdb_cluster_hash_spark.operators.skew import (  # noqa: F401
     replicate_for_salted_join,
 )
 from duckdb_cluster_hash_spark.operators.distribution import (  # noqa: F401
-    analyze_distribution,
-    hot_slots,
     repartition_by_slot,
     write_partitioned_by_node,
 )

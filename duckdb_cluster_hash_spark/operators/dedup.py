@@ -59,7 +59,6 @@ def _materialize_positions(df: DataFrame):
 
 
 __all__ = [
-    "exact_dedup",
     "dedup_representatives",
     "word_ngrams",
     "shingle_table",
@@ -140,15 +139,6 @@ def clear_shared_cache(df: DataFrame | None = None) -> int:
 # ---------------------------------------------------------------------------
 # Exact dedup (C3)
 # ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Keep one row per distinct value of ``cols`` (first wins arbitrarily).
-
-    For wide payloads prefer :func:`dedup_representatives`, which shuffles
-    a digest instead of the full row.
-    """
-    return df.dropDuplicates(cols)
-
 
 def dedup_representatives(
     df: DataFrame, text_col: str, id_col: str

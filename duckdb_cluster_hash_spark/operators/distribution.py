@@ -1,17 +1,15 @@
-"""Cluster-placement analytics and data routing (SURVEY.md §2 Tier C1/C2).
+"""Cluster-placement data routing (SURVEY.md §2 Tier C1/C2).
 
 The reference computes key placement (slot/node) but never moves data; on
-Spark the natural completion is to *act* on that placement: analyze the
-distribution a key column induces (the reference README's motivating use
-case, README.md:10-15,108-120), and physically co-locate / route rows by
-slot or node for downstream cluster loads.
+Spark the natural completion is to *act* on that placement: physically
+co-locate / route rows by slot or node for downstream cluster loads.  The
+per-node distribution analytics are catalog queries (plans/cluster.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from duckdb_cluster_hash_spark.core import DEFAULT_NODES
 from duckdb_cluster_hash_spark.functions.clusterhash import (
@@ -21,53 +19,9 @@ from duckdb_cluster_hash_spark.functions.clusterhash import (
 )
 
 __all__ = [
-    "analyze_distribution",
-    "hot_slots",
     "repartition_by_slot",
     "write_partitioned_by_node",
 ]
-
-
-def analyze_distribution(
-    df: DataFrame, key_col: str, n_nodes: int = DEFAULT_NODES
-) -> DataFrame:
-    """Per-node key distribution with skew diagnostics.
-
-    Returns (node_id, key_count, share_bp, skew_ratio) where share_bp is
-    the node's share in basis points (exact integer math) and skew_ratio
-    is key_count / mean-count rounded to 4 decimals.  One shuffle
-    (partial aggregation handles the 100 TB case); the window over the
-    6-1024-row aggregate is trivial.
-    """
-    agg = (
-        df.select(cluster_node_col(key_col, n_nodes).alias("node_id"))
-        .groupBy("node_id")
-        .agg(F.count("*").alias("key_count"))
-    )
-    w = Window.partitionBy()
-    total = F.sum("key_count").over(w)
-    mean = total / F.count("*").over(w)
-    return agg.select(
-        "node_id",
-        "key_count",
-        F.floor((10000 * F.col("key_count")) / total).alias("share_bp"),
-        F.round(F.col("key_count") / mean, 4).alias("skew_ratio"),
-    ).orderBy("node_id")
-
-
-def hot_slots(df: DataFrame, key_col: str, k: int = 10) -> DataFrame:
-    """Top-k hottest slots (deterministic tiebreak on slot id).
-
-    ORDER BY + LIMIT compiles to TakeOrderedAndProject: only k rows leave
-    each partition after the aggregate.
-    """
-    return (
-        df.select(cluster_slot_col(key_col).alias("slot"))
-        .groupBy("slot")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("slot"))
-        .limit(k)
-    )
 
 
 def repartition_by_slot(

@@ -28,7 +28,7 @@ Fake media format (deterministic from doc_id):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -64,6 +64,53 @@ __all__ = [
 ]
 
 _MAGIC = b"FIMG"
+
+# pandas dtype of an output column, by the Spark type its schema declares
+_PANDAS_DTYPES = {"bigint": "int64", "int": "int32", "string": object}
+
+
+def _map_media(
+    df: DataFrame,
+    schema: StructType,
+    per_blob: Callable[[bytes], tuple],
+    id_col: str = "doc_id",
+    carry: tuple = (),
+) -> DataFrame:
+    """The one batch loop of the per-blob media kernels: an Arrow-batched
+    ``mapInPandas`` that turns each ``media`` blob into one output row
+    ``(id, *per_blob(blob), *carry)``.  ``schema`` declares the id column
+    first and ``per_blob``'s fields after it; each column's pandas dtype
+    comes from its declared Spark type.  Payload bytes cross into Python
+    once per batch and only the per-blob results come out.
+
+    ``carry`` names input columns passed through unchanged, appended after
+    the schema's fields.  One row comes out per input row, in input order,
+    so carried values align positionally — the streaming ingest path needs
+    its event-time column to survive the kernel so the watermark can ride
+    on it (plans/streaming.docs_streaming_media_dedup).
+    """
+    out_schema = StructType(schema.fields + [df.schema[c] for c in carry])
+    fields = [
+        (f.name, _PANDAS_DTYPES[f.dataType.simpleString()])
+        for f in schema.fields[1:]
+    ]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [per_blob(bytes(m)) for m in pdf["media"]]
+            cols = list(zip(*rows)) if rows else [()] * len(fields)
+            yield pd.DataFrame(
+                {
+                    schema.fields[0].name: pdf[id_col].to_numpy(dtype="int64"),
+                    **{
+                        name: np.array(vals, dtype=dtype)
+                        for (name, dtype), vals in zip(fields, cols)
+                    },
+                    **{c: pdf[c].reset_index(drop=True) for c in carry},
+                }
+            )
+
+    return df.select(id_col, "media", *carry).mapInPandas(run, out_schema)
 
 
 def attach_fake_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -163,48 +210,27 @@ def media_byte_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     format sniffing all run on byte histograms before any decode).
 
     Per document: payload length, distinct byte count, byte sum and
-    min/max — each from a numpy ``bincount`` over the Arrow batch; bytes
-    never leave the batch as Python ints.  Integer-exact, so the whole
+    min/max — each from a numpy ``bincount`` over the payload; bytes
+    never leave the blob as Python ints.  Integer-exact, so the whole
     stage is oracle-checkable (the fake payload is the UTF-8 text, and
     the corpus is ASCII, so DuckDB reproduces it from code points).
     """
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            media = pdf["media"].to_numpy()
-            n = len(media)
-            payload_len = np.empty(n, dtype=np.int64)
-            distinct = np.empty(n, dtype=np.int32)
-            byte_sum = np.empty(n, dtype=np.int64)
-            byte_min = np.empty(n, dtype=np.int32)
-            byte_max = np.empty(n, dtype=np.int32)
-            for i, m in enumerate(media):
-                payload = np.frombuffer(m, dtype=np.uint8, offset=16)
-                payload_len[i] = payload.size
-                if payload.size:
-                    counts = np.bincount(payload, minlength=256)
-                    present = np.nonzero(counts)[0]
-                    distinct[i] = present.size
-                    byte_sum[i] = int(counts @ np.arange(256, dtype=np.int64))
-                    byte_min[i] = int(present[0])
-                    byte_max[i] = int(present[-1])
-                else:
-                    distinct[i] = 0
-                    byte_sum[i] = 0
-                    byte_min[i] = -1
-                    byte_max[i] = -1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64").to_numpy(),
-                    "payload_len": payload_len,
-                    "distinct_bytes": distinct,
-                    "byte_sum": byte_sum,
-                    "byte_min": byte_min,
-                    "byte_max": byte_max,
-                }
-            )
+    def features(blob: bytes) -> tuple:
+        payload = np.frombuffer(blob, dtype=np.uint8, offset=16)
+        if not payload.size:
+            return 0, 0, 0, -1, -1
+        counts = np.bincount(payload, minlength=256)
+        present = np.nonzero(counts)[0]
+        return (
+            payload.size,
+            present.size,
+            int(counts @ np.arange(256, dtype=np.int64)),
+            int(present[0]),
+            int(present[-1]),
+        )
 
-    return df.select(id_col, "media").mapInPandas(extract, BYTE_FEATURES_SCHEMA)
+    return _map_media(df, BYTE_FEATURES_SCHEMA, features, id_col)
 
 
 def decode_image(data: bytes):
@@ -364,62 +390,58 @@ def pnm_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     The decode is the REAL parser (:func:`decode_pnm`) over the actual
     image bytes — header grammar, comments, raster offset — not
     arithmetic on the metadata; the deterministic generator only makes
-    the result oracle-checkable.  Arrow-batched ``mapInPandas``: bytes
-    cross into Python once per batch, stats come off numpy views.
+    the result oracle-checkable.  Stats come off numpy views.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            doc_id = pdf[id_col].to_numpy(dtype="int64")
-            fmt = []
-            width = np.empty(n, dtype=np.int32)
-            height = np.empty(n, dtype=np.int32)
-            channels = np.empty(n, dtype=np.int32)
-            maxval = np.empty(n, dtype=np.int32)
-            px_sum = np.empty(n, dtype=np.int64)
-            px_min = np.empty(n, dtype=np.int32)
-            px_max = np.empty(n, dtype=np.int32)
-            for i, m in enumerate(pdf["media"]):
-                w, h, ch, mv, px = decode_pnm(bytes(m))
-                fmt.append("P6" if ch == 3 else "P5")
-                width[i], height[i], channels[i], maxval[i] = w, h, ch, mv
-                px_sum[i] = int(px.sum(dtype=np.int64))
-                px_min[i] = int(px.min())
-                px_max[i] = int(px.max())
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_id,
-                    "fmt": fmt,
-                    "width": width,
-                    "height": height,
-                    "channels": channels,
-                    "maxval": maxval,
-                    "px_sum": px_sum,
-                    "px_min": px_min,
-                    "px_max": px_max,
-                    "mean_milli": 1000 * px_sum
-                    // (
-                        width.astype("int64")
-                        * height.astype("int64")
-                        * channels.astype("int64")
-                    ),
-                }
-            )
+    def stats(blob: bytes) -> tuple:
+        w, h, ch, mv, px = decode_pnm(blob)
+        px_sum = int(px.sum(dtype=np.int64))
+        return (
+            "P6" if ch == 3 else "P5",
+            w, h, ch, mv,
+            px_sum, int(px.min()), int(px.max()),
+            1000 * px_sum // (w * h * ch),
+        )
 
-    return df.select(id_col, "media").mapInPandas(decode, PNM_STATS_SCHEMA)
+    return _map_media(df, PNM_STATS_SCHEMA, stats, id_col)
 
 
-# 9x8 sample grid -> 8 horizontal-gradient bits per row -> 8 one-byte
-# bands.  The grid is NEAREST-NEIGHBOR (x = w*gx//9, y = h*gy//8):
-# integer-exact at any image size (area averaging has empty cells when
-# w < 9) and closed-form reproducible by the SQL oracle.
+# The three perceptual fingerprints share one shape: an 8-row x 9-column
+# int64 grid -> 8 horizontal-gradient bits per row -> 8 one-byte bands
+# (:func:`_dhash_bands`).  The image grid is NEAREST-NEIGHBOR
+# (x = w*gx//9, y = h*gy//8): integer-exact at any image size (area
+# averaging has empty cells when w < 9) and closed-form reproducible by
+# the SQL oracle.  Audio and video fill the same grid row-major from 72
+# segment sums of one sample stream (:func:`_segment_grid`).
 DHASH_GRID_W, DHASH_GRID_H = 9, 8
+DHASH_SEGMENTS = DHASH_GRID_W * DHASH_GRID_H
 
-PNM_DHASH_SCHEMA = StructType(
+DHASH_SCHEMA = StructType(
     [StructField("doc_id", LongType())]
     + [StructField(f"b{i}", IntegerType()) for i in range(DHASH_GRID_H)]
 )
+
+_DHASH_SHIFTS = 1 << np.arange(DHASH_GRID_W - 1, dtype=np.int64)
+
+
+def _dhash_bands(grid: np.ndarray) -> tuple:
+    """8x9 int64 grid -> 8 band bytes: bit gx of band gy =
+    ``grid[gy][gx+1] > grid[gy][gx]``."""
+    bits = (grid[:, 1:] > grid[:, :-1]) * _DHASH_SHIFTS
+    return tuple(int(b) for b in bits.sum(axis=1))
+
+
+def _segment_grid(stream: np.ndarray) -> np.ndarray:
+    """Sum an int64 stream of n values over 72 nearest-neighbor segments
+    ``[n*g//72, n*(g+1)//72)`` (empty segments = 0) and arrange them
+    row-major as the 8x9 dHash grid."""
+    n = stream.size
+    if n == 0:
+        return np.zeros((DHASH_GRID_H, DHASH_GRID_W), dtype=np.int64)
+    lo = (n * np.arange(DHASH_SEGMENTS + 1)) // DHASH_SEGMENTS
+    seg = np.add.reduceat(stream, lo[:-1])
+    seg[lo[:-1] == lo[1:]] = 0  # reduceat repeats the next value on an empty range
+    return seg.reshape(DHASH_GRID_H, DHASH_GRID_W)
 
 
 def pnm_dhash(
@@ -440,52 +462,23 @@ def pnm_dhash(
     3. sample a 9x8 grid at ``(h*gy//8, w*gx//9)``;
     4. bit gx of band gy = ``grid[gy][gx+1] > grid[gy][gx]``.
 
-    Arrow-batched ``mapInPandas``; payload bytes cross into Python once
-    per batch and 8 small ints per image come out — at 100 TB the wire
-    carries hashes, never rasters.
-
-    ``carry`` names input columns to pass through unchanged (appended
-    after the bands) — the streaming ingest path needs the event-time
-    column to survive the kernel so the watermark can ride on it
-    (plans/streaming.docs_streaming_media_dedup); the kernel emits
-    exactly one output row per input row in input order, so carried
-    values align positionally.
+    8 small ints per image come out — at 100 TB the wire carries
+    hashes, never rasters.  ``carry`` names input columns to pass
+    through after the bands (see :func:`_map_media`).
     """
-    shifts = 1 << np.arange(DHASH_GRID_W - 1, dtype=np.int64)
-    schema = StructType(
-        PNM_DHASH_SCHEMA.fields + [df.schema[c] for c in carry]
-    )
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = []
-            bands: list[list[int]] = [[] for _ in range(DHASH_GRID_H)]
-            for doc_id, m in zip(pdf[id_col], pdf["media"]):
-                w, h, ch, _mv, px = decode_pnm(bytes(m))
-                if ch == 3:
-                    p = px.reshape(h, w, 3).astype(np.int64)
-                    gray = (p[..., 0] * 299 + p[..., 1] * 587 + p[..., 2] * 114) // 1000
-                else:
-                    gray = px.reshape(h, w).astype(np.int64)
-                ys = (h * np.arange(DHASH_GRID_H)) // DHASH_GRID_H
-                xs = (w * np.arange(DHASH_GRID_W)) // DHASH_GRID_W
-                grid = gray[np.ix_(ys, xs)]
-                b = ((grid[:, 1:] > grid[:, :-1]) * shifts).sum(axis=1)
-                ids.append(int(doc_id))
-                for i in range(DHASH_GRID_H):
-                    bands[i].append(int(b[i]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    **{
-                        f"b{i}": pd.Series(bands[i], dtype="int32")
-                        for i in range(DHASH_GRID_H)
-                    },
-                    **{c: pdf[c].reset_index(drop=True) for c in carry},
-                }
-            )
+    def bands(blob: bytes) -> tuple:
+        w, h, ch, _mv, px = decode_pnm(blob)
+        if ch == 3:
+            p = px.reshape(h, w, 3).astype(np.int64)
+            gray = (p[..., 0] * 299 + p[..., 1] * 587 + p[..., 2] * 114) // 1000
+        else:
+            gray = px.reshape(h, w).astype(np.int64)
+        ys = (h * np.arange(DHASH_GRID_H)) // DHASH_GRID_H
+        xs = (w * np.arange(DHASH_GRID_W)) // DHASH_GRID_W
+        return _dhash_bands(gray[np.ix_(ys, xs)])
 
-    return df.select(id_col, "media", *carry).mapInPandas(hash_batches, schema)
+    return _map_media(df, DHASH_SCHEMA, bands, id_col, carry)
 
 
 def decode_wav(data: bytes) -> tuple[int, int, int, int, np.ndarray]:
@@ -638,68 +631,29 @@ def wav_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode a WAV binary column and emit per-clip sample statistics
     (the screen an audio pipeline runs before feature extraction:
     silence/clipping detection = min/max/energy).  The decode is the
-    REAL RIFF parser (:func:`decode_wav`) over the actual bytes;
-    Arrow-batched ``mapInPandas``, stats off numpy int64 views.
+    REAL RIFF parser (:func:`decode_wav`) over the actual bytes; stats
+    come off numpy int64 views.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            doc_id = pdf[id_col].to_numpy(dtype="int64")
-            sample_rate = np.empty(n, dtype=np.int32)
-            channels = np.empty(n, dtype=np.int32)
-            bits = np.empty(n, dtype=np.int32)
-            n_frames = np.empty(n, dtype=np.int64)
-            sample_sum = np.empty(n, dtype=np.int64)
-            sample_min = np.empty(n, dtype=np.int32)
-            sample_max = np.empty(n, dtype=np.int32)
-            energy = np.empty(n, dtype=np.int64)
-            for i, m in enumerate(pdf["media"]):
-                sr, ch, b, nf, s = decode_wav(bytes(m))
-                s64 = s.astype(np.int64)
-                sample_rate[i], channels[i], bits[i], n_frames[i] = sr, ch, b, nf
-                sample_sum[i] = int(s64.sum())
-                sample_min[i] = int(s.min()) if s.size else 0
-                sample_max[i] = int(s.max()) if s.size else 0
-                energy[i] = int((s64 * s64).sum())
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_id,
-                    "sample_rate": sample_rate,
-                    "channels": channels,
-                    "bits": bits,
-                    "n_frames": n_frames,
-                    "sample_sum": sample_sum,
-                    "sample_min": sample_min,
-                    "sample_max": sample_max,
-                    "energy": energy,
-                }
-            )
+    def stats(blob: bytes) -> tuple:
+        sr, ch, bits, nf, s = decode_wav(blob)
+        s64 = s.astype(np.int64)
+        return (
+            sr, ch, bits, nf,
+            int(s64.sum()),
+            int(s.min()) if s.size else 0,
+            int(s.max()) if s.size else 0,
+            int((s64 * s64).sum()),
+        )
 
-    return df.select(id_col, "media").mapInPandas(decode, WAV_STATS_SCHEMA)
-
-
-# Audio fingerprint geometry: 72 equal (nearest-neighbor) segments of
-# the interleaved sample stream, arranged row-major into an 8x9 energy
-# grid — the audio twin of the image dHash's 9x8 luma grid.  Bit gx of
-# band gy compares adjacent SEGMENT ENERGIES, so the fingerprint tracks
-# the clip's energy envelope (robust to small sample perturbations that
-# leave segment sums ordered) while staying integer-exact and
-# closed-form reproducible by the SQL oracle.
-WAV_DHASH_SEGMENTS = 72
-
-WAV_DHASH_SCHEMA = StructType(
-    [StructField("doc_id", LongType())]
-    + [StructField(f"b{i}", IntegerType()) for i in range(8)]
-)
+    return _map_media(df, WAV_STATS_SCHEMA, stats, id_col)
 
 
 def wav_energy_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Perceptual energy-profile hash of a WAV binary column, one row
-    per clip: ``(doc_id, b0..b7)`` — one byte per grid row (band), the
-    unit of the banded-Hamming candidate join, shaped exactly like
-    :func:`pnm_dhash` so the image and audio near-dup queries share
-    one pair-class machine (plans/dedup_text._sig_pair_classes).
+    per clip: ``(doc_id, b0..b7)`` — the audio twin of the image
+    dHash, shaped exactly like :func:`pnm_dhash` so all modalities
+    share one pair-class machine (plans/dedup_text._sig_pair_classes).
 
     The recipe (real RIFF decode, integer-only arithmetic so the
     oracle can reproduce every bit from the generator's closed form):
@@ -715,43 +669,17 @@ def wav_energy_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     4. arrange row-major into 8 rows of 9; bit gx of band gy =
        ``E[9*gy + gx + 1] > E[9*gy + gx]``.
 
-    Arrow-batched ``mapInPandas``; clip bytes cross into Python once
-    per batch and 8 small ints per clip come out — at 100 TB the wire
-    carries fingerprints, never waveforms.
+    Bits compare adjacent SEGMENT ENERGIES, so the fingerprint tracks
+    the clip's energy envelope (robust to small sample perturbations
+    that leave segment sums ordered).  8 small ints per clip come out
+    — at 100 TB the wire carries fingerprints, never waveforms.
     """
-    nseg = WAV_DHASH_SEGMENTS
-    shifts = 1 << np.arange(8, dtype=np.int64)
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = []
-            bands: list[list[int]] = [[] for _ in range(8)]
-            for doc_id, m in zip(pdf[id_col], pdf["media"]):
-                _sr, _ch, _b, _nf, s = decode_wav(bytes(m))
-                e = s.astype(np.int64) ** 2
-                n = e.size
-                bnd = (n * np.arange(nseg + 1)) // nseg
-                if n >= 1:
-                    seg = np.add.reduceat(e, bnd[:-1])
-                    seg[bnd[:-1] == bnd[1:]] = 0  # reduceat quirk on
-                else:  # empty ranges: repeats the next value — zero it
-                    seg = np.zeros(nseg, dtype=np.int64)
-                grid = seg.reshape(8, nseg // 8)
-                b = ((grid[:, 1:] > grid[:, :-1]) * shifts).sum(axis=1)
-                ids.append(int(doc_id))
-                for i in range(8):
-                    bands[i].append(int(b[i]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    **{
-                        f"b{i}": pd.Series(bands[i], dtype="int32")
-                        for i in range(8)
-                    },
-                }
-            )
+    def bands(blob: bytes) -> tuple:
+        s = decode_wav(blob)[4].astype(np.int64)
+        return _dhash_bands(_segment_grid(s * s))
 
-    return df.select(id_col, "media").mapInPandas(hash_batches, WAV_DHASH_SCHEMA)
+    return _map_media(df, DHASH_SCHEMA, bands, id_col)
 
 
 def decode_y4m(data: bytes) -> tuple[int, int, int, int, str, np.ndarray]:
@@ -919,76 +847,30 @@ def y4m_frame_stats(
     and emit per-clip luma statistics (the screen a video pipeline
     runs before feature extraction: black/blown-out detection =
     min/max, exposure drift = mean).  The decode is the REAL container
-    parser (:func:`decode_y4m`) over the actual bytes; Arrow-batched
-    ``mapInPandas``, stats off numpy uint8 views of the sampled Y
-    planes only.
+    parser (:func:`decode_y4m`) over the actual bytes; stats come off
+    numpy uint8 views of the sampled Y planes only.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            doc_id = pdf[id_col].to_numpy(dtype="int64")
-            width = np.empty(n, dtype=np.int32)
-            height = np.empty(n, dtype=np.int32)
-            fps_num = np.empty(n, dtype=np.int32)
-            fps_den = np.empty(n, dtype=np.int32)
-            colorspace = []
-            n_frames = np.empty(n, dtype=np.int64)
-            n_sampled = np.empty(n, dtype=np.int64)
-            y_sum = np.empty(n, dtype=np.int64)
-            y_min = np.empty(n, dtype=np.int32)
-            y_max = np.empty(n, dtype=np.int32)
-            for i, m in enumerate(pdf["media"]):
-                w, h, fn, fd, cs, y = decode_y4m(bytes(m))
-                sampled = y[::every_k]
-                width[i], height[i], fps_num[i], fps_den[i] = w, h, fn, fd
-                colorspace.append(cs)
-                n_frames[i], n_sampled[i] = y.shape[0], sampled.shape[0]
-                y_sum[i] = int(sampled.sum(dtype=np.int64))
-                y_min[i] = int(sampled.min()) if sampled.size else 0
-                y_max[i] = int(sampled.max()) if sampled.size else 0
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_id,
-                    "width": width,
-                    "height": height,
-                    "fps_num": fps_num,
-                    "fps_den": fps_den,
-                    "colorspace": colorspace,
-                    "n_frames": n_frames,
-                    "n_sampled": n_sampled,
-                    "y_sum": y_sum,
-                    "y_min": y_min,
-                    "y_max": y_max,
-                }
-            )
+    def stats(blob: bytes) -> tuple:
+        w, h, fn, fd, cs, y = decode_y4m(blob)
+        sampled = y[::every_k]
+        return (
+            w, h, fn, fd, cs,
+            y.shape[0], sampled.shape[0],
+            int(sampled.sum(dtype=np.int64)),
+            int(sampled.min()) if sampled.size else 0,
+            int(sampled.max()) if sampled.size else 0,
+        )
 
-    return df.select(id_col, "media").mapInPandas(decode, Y4M_STATS_SCHEMA)
-
-
-# Video fingerprint geometry: the concatenated per-frame LUMA planes
-# (decode_y4m returns Y only) form one byte stream per clip; 72 equal
-# nearest-neighbor segments of that stream, arranged row-major into an
-# 8x9 luma-mass grid — the spatio-temporal twin of the image dHash's
-# 9x8 luma grid and the audio energy-dHash's 8x9 energy grid.  Bit gx
-# of band gy compares adjacent SEGMENT LUMA SUMS (uint8 luma is
-# non-negative, so plain sums carry the envelope; no squaring needed —
-# audio squares only because PCM samples are signed).
-Y4M_DHASH_SEGMENTS = 72
-
-Y4M_DHASH_SCHEMA = StructType(
-    [StructField("doc_id", LongType())]
-    + [StructField(f"b{i}", IntegerType()) for i in range(8)]
-)
+    return _map_media(df, Y4M_STATS_SCHEMA, stats, id_col)
 
 
 def y4m_luma_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Perceptual luma-profile hash of a y4m binary column, one row per
-    clip: ``(doc_id, b0..b7)`` — one byte per grid row (band), the unit
-    of the banded-Hamming candidate join, shaped exactly like
-    :func:`pnm_dhash` / :func:`wav_energy_dhash` so all three
-    modalities share one pair-class machine
-    (plans/dedup_text._sig_pair_classes).
+    clip: ``(doc_id, b0..b7)`` — the spatio-temporal twin of the image
+    dHash, shaped exactly like :func:`pnm_dhash` /
+    :func:`wav_energy_dhash` so all three modalities share one
+    pair-class machine (plans/dedup_text._sig_pair_classes).
 
     The recipe (real container decode, integer-only arithmetic so the
     oracle can reproduce every bit from the generator's closed form):
@@ -1000,47 +882,20 @@ def y4m_luma_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
        fingerprint, matching the stats queries' luma-only contract);
     3. split the stream into 72 nearest-neighbor segments
        ``[n*g//72, n*(g+1)//72)`` and sum luma per segment (empty
-       segments = 0);
+       segments = 0; uint8 luma is non-negative, so plain sums carry
+       the envelope — audio squares only because PCM is signed);
     4. arrange row-major into 8 rows of 9; bit gx of band gy =
        ``L[9*gy + gx + 1] > L[9*gy + gx]``.
 
-    Arrow-batched ``mapInPandas``; clip bytes cross into Python once
-    per batch and 8 small ints per clip come out — at 100 TB the wire
-    carries fingerprints, never rasters.
+    8 small ints per clip come out — at 100 TB the wire carries
+    fingerprints, never rasters.
     """
-    nseg = Y4M_DHASH_SEGMENTS
-    shifts = 1 << np.arange(8, dtype=np.int64)
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = []
-            bands: list[list[int]] = [[] for _ in range(8)]
-            for doc_id, m in zip(pdf[id_col], pdf["media"]):
-                _w, _h, _fn, _fd, _cs, y = decode_y4m(bytes(m))
-                e = y.reshape(-1).astype(np.int64)
-                n = e.size
-                bnd = (n * np.arange(nseg + 1)) // nseg
-                if n >= 1:
-                    seg = np.add.reduceat(e, bnd[:-1])
-                    seg[bnd[:-1] == bnd[1:]] = 0  # reduceat quirk on
-                else:  # empty ranges: repeats the next value — zero it
-                    seg = np.zeros(nseg, dtype=np.int64)
-                grid = seg.reshape(8, nseg // 8)
-                b = ((grid[:, 1:] > grid[:, :-1]) * shifts).sum(axis=1)
-                ids.append(int(doc_id))
-                for i in range(8):
-                    bands[i].append(int(b[i]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    **{
-                        f"b{i}": pd.Series(bands[i], dtype="int32")
-                        for i in range(8)
-                    },
-                }
-            )
+    def bands(blob: bytes) -> tuple:
+        y = decode_y4m(blob)[5]
+        return _dhash_bands(_segment_grid(y.reshape(-1).astype(np.int64)))
 
-    return df.select(id_col, "media").mapInPandas(hash_batches, Y4M_DHASH_SCHEMA)
+    return _map_media(df, DHASH_SCHEMA, bands, id_col)
 
 
 def sample_frames(

@@ -41,10 +41,6 @@ def ngram_jaccard_pairs_sql(n: int = 3, threshold: float = 0.2) -> str:
     )
 
 
-def _h60_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
 def minhash_bands_cte(n: int = 3, k: int = 16, bands: int = 8, rows: int = 2) -> str:
     """CTE chain ending in ``bands(doc_id, band_hash)``: shingles ->
     Kirsch-Mitzenmacher double-hashed MinHash signatures -> LSH band

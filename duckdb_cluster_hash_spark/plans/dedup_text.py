@@ -6,10 +6,14 @@ window, and rotation stay in catalog.py.
 """
 
 from __future__ import annotations
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from duckdb_cluster_hash_spark import oracle_text as _ot
 from duckdb_cluster_hash_spark.operators import dedup as _dd
+from duckdb_cluster_hash_spark.operators import multimodal as _mm
 from duckdb_cluster_hash_spark.functions import text as _tx
 from duckdb_cluster_hash_spark.plans._registry import _t, query
 
@@ -1049,7 +1053,7 @@ def docs_softdedup_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Per-(band_idx, band) frequency cap over DISTINCT signatures — the
-# skew safety valve for both dHash banded joins (image + audio), the
+# skew safety valve for the dHash banded joins (every MODALITIES entry), the
 # twin of the substring-anchor df cap (operators/dedup.py).  A band
 # bucket holding f distinct signatures contributes ~f^2 candidate
 # pairs, and a low-entropy band (flat images -> b_i = 0, silent clips
@@ -1121,7 +1125,7 @@ def _image_band_head() -> str:
     re-derived from attach_fake_pnm's closed form (pixel(i) =
     (7*doc_id + 13*i) % 256, Rec.601 integer luma, nearest-neighbor
     9x8 grid, horizontal-gradient bits).  Shared by the near-dup class
-    oracle (:func:`_image_dhash_ctes`) and the streaming media-dedup
+    oracle (``MODALITIES["image"]``) and the streaming media-dedup
     oracle (plans/streaming.docs_streaming_media_dedup)."""
     base = "(((h * gy) // 8) * w + (w * gx) // 9)"
 
@@ -1146,13 +1150,6 @@ def _image_band_head() -> str:
         "THEN (CAST(1 AS BIGINT) << gx) ELSE 0 END), 0) AS BIGINT) AS band "
         "FROM s WHERE gx < 8 GROUP BY d, gy)"
     )
-
-
-def _image_dhash_ctes(cap: int = DHASH_BAND_CAP) -> str:
-    """Image oracle: the closed-form band head
-    (:func:`_image_band_head`) through the shared capped all-pairs
-    class tail (:func:`_dhash_class_ctes`)."""
-    return _dhash_class_ctes(_image_band_head(), cap)
 
 
 # Clip length for the audio near-dup fingerprint (multimodal.
@@ -1193,10 +1190,6 @@ def _audio_band_head() -> str:
         "THEN (CAST(1 AS BIGINT) << gx) ELSE 0 END), 0) AS BIGINT) AS band "
         "FROM s WHERE gx < 8 GROUP BY d, gy)"
     )
-
-
-def _audio_dhash_ctes(cap: int = DHASH_BAND_CAP) -> str:
-    return _dhash_class_ctes(_audio_band_head(), cap)
 
 
 # Clip length for the video near-dup fingerprint (multimodal.
@@ -1245,66 +1238,56 @@ def _video_band_head() -> str:
     )
 
 
-def _video_dhash_ctes(cap: int = DHASH_BAND_CAP) -> str:
-    return _dhash_class_ctes(_video_band_head(), cap)
+class Modality(NamedTuple):
+    """One perceptual near-dup modality: the memo-key prefix of its
+    fingerprint table (``{memo}_dhash``) and pair-class table
+    (``{memo}_pair_classes``), the builder from a ``doc_id`` frame to
+    its ``(doc_id, b0..b7)`` signatures, and the oracle band head
+    ending in CTE ``b(d, gy, band)``."""
+
+    memo: str
+    signatures: Callable[[DataFrame], DataFrame]
+    band_head: Callable[[], str]
 
 
-def image_dhash_shared(docs: DataFrame) -> DataFrame:
-    """Per-image perceptual-hash table ``(doc_id, b0..b7)``
-    (operators/multimodal.pnm_dhash over attach_fake_pnm media),
-    materialized once per corpus per session through the dedup family
-    memo and shared between the image near-dup pair and bill queries —
-    one decode + hash pass, 8 small ints per image on the wire."""
-    from duckdb_cluster_hash_spark.operators import multimodal as _mm
+# Registration order = catalog order: image, audio, video.
+MODALITIES = {
+    "image": Modality(
+        "pnm",
+        lambda ids: _mm.pnm_dhash(_mm.attach_fake_pnm(ids)),
+        _image_band_head,
+    ),
+    "audio": Modality(
+        "wav",
+        lambda ids: _mm.wav_energy_dhash(
+            _mm.attach_fake_wav(ids, n_base=WAV_NEARDUP_BASE)
+        ),
+        _audio_band_head,
+    ),
+    "video": Modality(
+        "y4m",
+        lambda ids: _mm.y4m_luma_dhash(
+            _mm.attach_fake_y4m(ids, nf_base=Y4M_NEARDUP_FRAMES)
+        ),
+        _video_band_head,
+    ),
+}
 
+
+def dhash_shared(docs: DataFrame, modality: str) -> DataFrame:
+    """Per-document fingerprint table ``(doc_id, b0..b7)`` of one
+    modality (real decode of the synthesized media -> 8 one-byte
+    bands), materialized once per corpus per session through the
+    session memo and shared between the modality's near-dup pair and
+    bill queries — one decode + hash pass, 8 small ints per document
+    on the wire."""
+    m = MODALITIES[modality]
     return _dd._shared_checkpoint(
-        docs,
-        ("pnm_dhash",),
-        lambda: _mm.pnm_dhash(_mm.attach_fake_pnm(docs.select("doc_id"))),
+        docs, (f"{m.memo}_dhash",), lambda: m.signatures(docs.select("doc_id"))
     )
 
 
 _IMG_BANDS = [f"b{i}" for i in range(8)]
-
-
-def audio_dhash_shared(docs: DataFrame) -> DataFrame:
-    """Per-clip energy-dHash table ``(doc_id, b0..b7)``
-    (operators/multimodal.wav_energy_dhash over attach_fake_wav media
-    at the near-dup clip length), materialized once per corpus per
-    session through the session memo and shared between the audio
-    near-dup pair and bill queries — one decode + fingerprint pass, 8
-    small ints per clip on the wire."""
-    from duckdb_cluster_hash_spark.operators import multimodal as _mm
-
-    return _dd._shared_checkpoint(
-        docs,
-        ("wav_dhash",),
-        lambda: _mm.wav_energy_dhash(
-            _mm.attach_fake_wav(
-                docs.select("doc_id"), n_base=WAV_NEARDUP_BASE
-            )
-        ),
-    )
-
-
-def video_dhash_shared(docs: DataFrame) -> DataFrame:
-    """Per-clip luma-dHash table ``(doc_id, b0..b7)``
-    (operators/multimodal.y4m_luma_dhash over attach_fake_y4m media at
-    the near-dup clip length), materialized once per corpus per
-    session through the session memo and shared between the video
-    near-dup pair and bill queries — one decode + fingerprint pass, 8
-    small ints per clip on the wire."""
-    from duckdb_cluster_hash_spark.operators import multimodal as _mm
-
-    return _dd._shared_checkpoint(
-        docs,
-        ("y4m_dhash",),
-        lambda: _mm.y4m_luma_dhash(
-            _mm.attach_fake_y4m(
-                docs.select("doc_id"), nf_base=Y4M_NEARDUP_FRAMES
-            )
-        ),
-    )
 
 
 def _sig_pair_classes(
@@ -1407,241 +1390,77 @@ def _sig_pair_classes(
     return clusters.unionByName(cross)
 
 
-def _image_pair_classes(docs: DataFrame, tau: int = 6) -> DataFrame:
-    """Image near-dup pair classes: memoized dHash table through the
-    shared signature-class machine (:func:`_sig_pair_classes` — see it
-    for the class semantics, the distinct-signature collapse, and the
-    band-cap recall rule).  The CLASS table itself is also memoized
-    (hundreds of rows — cluster + cross class rows, never doc pairs):
-    the pairs and bill queries consume the identical class set, so the
-    grouping + banded join runs once per corpus per session."""
+def _pair_classes(docs: DataFrame, modality: str, tau: int = 6) -> DataFrame:
+    """Near-dup pair classes of one modality: its memoized fingerprint
+    table through the shared signature-class machine
+    (:func:`_sig_pair_classes` — see it for the class semantics, the
+    distinct-signature collapse, and the band-cap recall rule).  The
+    CLASS table itself is also memoized (hundreds of rows — cluster +
+    cross class rows, never doc pairs): the pairs and bill queries
+    consume the identical class set, so the grouping + banded join runs
+    once per corpus per session."""
     return _dd._shared_checkpoint(
         docs,
-        ("pnm_pair_classes", tau, DHASH_BAND_CAP),
-        lambda: _sig_pair_classes(image_dhash_shared(docs), tau),
+        (f"{MODALITIES[modality].memo}_pair_classes", tau, DHASH_BAND_CAP),
+        lambda: _sig_pair_classes(dhash_shared(docs, modality), tau),
     )
 
 
-def _audio_pair_classes(docs: DataFrame, tau: int = 6) -> DataFrame:
-    """Audio near-dup pair classes: memoized energy-dHash table through
-    the shared signature-class machine (:func:`_sig_pair_classes`);
-    class table memoized like the image twin."""
-    return _dd._shared_checkpoint(
-        docs,
-        ("wav_pair_classes", tau, DHASH_BAND_CAP),
-        lambda: _sig_pair_classes(audio_dhash_shared(docs), tau),
-    )
+def _register_neardup(modality: str) -> None:
+    """Register ``docs_{modality}_neardup_pairs`` and ``_bill``: REAL
+    media decode (netpbm / RIFF-WAVE / YUV4MPEG2 over spec-compliant
+    synthesized media) -> 64-bit perceptual fingerprint -> signature
+    grouping -> banded Hamming join — the media twins of
+    docs_simhash_neardup_pairs.
 
+    ``_pairs`` emits the 100 closest pair CLASSES by (hamming, doc_a,
+    doc_b): each row is one exact-dup cluster (distance 0) or one
+    distinct-signature pair, represented by its smallest member ids
+    with its doc-pair multiplicity — the cluster-level view a dedup
+    pipeline acts on.  ``_bill`` is the pair-mass bill: DOC-pair counts
+    per Hamming distance 0..6, summed from the class multiplicities
+    (cnt-choose-2 or ca*cb doc pairs per row), so nothing doc-pair-sized
+    is ever materialized; it grades EVERY pair the banding finds, so a
+    distance-5/6 recall hole the top-100 query can't see hash-mismatches.
 
-def _video_pair_classes(docs: DataFrame, tau: int = 6) -> DataFrame:
-    """Video near-dup pair classes: memoized luma-dHash table through
-    the shared signature-class machine (:func:`_sig_pair_classes`);
-    class table memoized like the image twin."""
-    return _dd._shared_checkpoint(
-        docs,
-        ("y4m_pair_classes", tau, DHASH_BAND_CAP),
-        lambda: _sig_pair_classes(video_dhash_shared(docs), tau),
-    )
-
-
-@query(
-    "docs_image_neardup_pairs",
-    oracle=(
-        _image_dhash_ctes()
-        + " SELECT doc_a, doc_b, hamming, n_pairs FROM cls "
-        "ORDER BY hamming, doc_a, doc_b LIMIT 100"
-    ),
-)
-def docs_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image near-dup (the multimodal x dedup intersection):
-    REAL netpbm decode -> 64-bit difference hash (integer Rec.601 luma,
-    nearest-neighbor 9x8 grid, horizontal-gradient bits) -> signature
-    grouping -> banded Hamming join — the image twin of
-    docs_simhash_neardup_pairs, over spec-compliant PPM/PGM images
-    synthesized by attach_fake_pnm.  Emits the 100 closest pair
-    CLASSES by (hamming, doc_a, doc_b): each row is one exact-dup
-    cluster (distance 0) or one distinct-signature pair, represented
-    by its smallest member ids with its doc-pair multiplicity — the
-    cluster-level view a dedup pipeline actually acts on.
-
-    Scale: decode + hashing is one Arrow-batched map pass emitting 8
-    small ints per image, memoized per corpus (image_dhash_shared);
+    Scale: decode + fingerprinting is one Arrow-batched map pass emitting
+    8 small ints per document, memoized per corpus (:func:`dhash_shared`);
     the candidate join runs over DISTINCT signatures only, on
-    (band_idx, band) EQUALITY, never a cartesian product, with hot
-    band buckets dropped by the DHASH_BAND_CAP skew valve (linear in
-    signature diversity even on high-diversity corpora — see
-    _sig_pair_classes for the full cost/recall analysis).  The oracle
-    grades against an all-pairs formulation carrying the identical
-    cap rule, so a banding recall hole would hash-mismatch.
+    (band_idx, band) EQUALITY, never a cartesian product, with hot band
+    buckets dropped by the DHASH_BAND_CAP skew valve (see
+    _sig_pair_classes for the full cost/recall analysis).  Both oracles
+    re-derive every bit from the generator's closed form and grade an
+    all-pairs formulation carrying the identical cap rule.
     """
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        _image_pair_classes(docs, 6)
-        .orderBy("hamming", "doc_a", "doc_b")
-        .limit(100)
+    ctes = _dhash_class_ctes(MODALITIES[modality].band_head())
+
+    @query(
+        f"docs_{modality}_neardup_pairs",
+        oracle=ctes + " SELECT doc_a, doc_b, hamming, n_pairs FROM cls "
+        "ORDER BY hamming, doc_a, doc_b LIMIT 100",
     )
+    def pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _t(spark, sf_dir, "documents")
+        return (
+            _pair_classes(docs, modality)
+            .orderBy("hamming", "doc_a", "doc_b")
+            .limit(100)
+        )
 
-
-@query(
-    "docs_image_neardup_bill",
-    oracle=(
-        _image_dhash_ctes()
-        + " SELECT hamming, CAST(sum(n_pairs) AS BIGINT) AS n_pairs "
-        "FROM cls GROUP BY hamming ORDER BY hamming"
-    ),
-)
-def docs_image_neardup_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair-mass bill for the perceptual image near-dup join: DOC-pair
-    counts per Hamming distance 0..6 — the full near-dup mass in <= 7
-    rows, computed from multiplicity-weighted signature CLASSES (see
-    _sig_pair_classes for the class semantics the pairs query exposes
-    directly: each class row stands for cnt-choose-2 or ca*cb doc
-    pairs, and this bill sums exactly those multiplicities — the
-    synthetic corpus near-dups densely, 829k doc pairs at sf0.1, yet
-    nothing doc-pair-sized is ever materialized).  Grades EVERY pair
-    the banding finds, so a distance-5/6 recall hole the top-100 query
-    can't see would hash-mismatch here.
-
-    Scale: shares the memoized hash table and the distinct-signature
-    machinery with docs_image_neardup_pairs; the rollup is one 7-group
-    aggregate over signature-pair rows.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        _image_pair_classes(docs, 6)
-        .groupBy("hamming")
-        .agg(F.sum("n_pairs").cast("bigint").alias("n_pairs"))
-        .orderBy("hamming")
+    @query(
+        f"docs_{modality}_neardup_bill",
+        oracle=ctes + " SELECT hamming, CAST(sum(n_pairs) AS BIGINT) AS n_pairs "
+        "FROM cls GROUP BY hamming ORDER BY hamming",
     )
+    def bill(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _t(spark, sf_dir, "documents")
+        return (
+            _pair_classes(docs, modality)
+            .groupBy("hamming")
+            .agg(F.sum("n_pairs").cast("bigint").alias("n_pairs"))
+            .orderBy("hamming")
+        )
 
 
-@query(
-    "docs_audio_neardup_pairs",
-    oracle=(
-        _audio_dhash_ctes()
-        + " SELECT doc_a, doc_b, hamming, n_pairs FROM cls "
-        "ORDER BY hamming, doc_a, doc_b LIMIT 100"
-    ),
-)
-def docs_audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual AUDIO near-dup — completes the modality trio (text
-    MinHash/SimHash, image dHash, audio energy-dHash): REAL RIFF/WAVE
-    decode -> 72-segment integer energy profile -> 64-bit
-    sign-of-delta fingerprint (operators/multimodal.wav_energy_dhash)
-    -> signature grouping -> banded Hamming join, over spec-compliant
-    PCM16 clips synthesized by attach_fake_wav (LIST-chunk skip and
-    RIFF padding exercised on every row).  Emits the 100 closest pair
-    CLASSES by (hamming, doc_a, doc_b): each row is one exact-dup
-    cluster (distance 0) or one distinct-signature pair, represented
-    by its smallest member ids with its doc-pair multiplicity.
-
-    Scale: decode + fingerprinting is one Arrow-batched map pass
-    emitting 8 small ints per clip, memoized per corpus
-    (audio_dhash_shared); the candidate join runs over DISTINCT
-    signatures only, on (band_idx, band) EQUALITY, hot buckets dropped
-    by DHASH_BAND_CAP — the same pair-class machine as the image twin
-    (_sig_pair_classes).  The oracle re-derives every energy bit from
-    the generator's closed form and grades an all-pairs formulation
-    with the identical cap rule.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        _audio_pair_classes(docs, 6)
-        .orderBy("hamming", "doc_a", "doc_b")
-        .limit(100)
-    )
-
-
-@query(
-    "docs_audio_neardup_bill",
-    oracle=(
-        _audio_dhash_ctes()
-        + " SELECT hamming, CAST(sum(n_pairs) AS BIGINT) AS n_pairs "
-        "FROM cls GROUP BY hamming ORDER BY hamming"
-    ),
-)
-def docs_audio_neardup_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair-mass bill for the audio near-dup join: DOC-pair counts per
-    Hamming distance 0..6, summed from multiplicity-weighted signature
-    classes exactly like docs_image_neardup_bill.  Grades EVERY pair
-    the banding finds (a recall hole anywhere in the 0..6 range
-    hash-mismatches against the all-pairs oracle).
-
-    Scale: shares the memoized fingerprint table and the
-    distinct-signature machinery with docs_audio_neardup_pairs; the
-    rollup is one 7-group aggregate over signature-pair rows.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        _audio_pair_classes(docs, 6)
-        .groupBy("hamming")
-        .agg(F.sum("n_pairs").cast("bigint").alias("n_pairs"))
-        .orderBy("hamming")
-    )
-
-
-@query(
-    "docs_video_neardup_pairs",
-    oracle=(
-        _video_dhash_ctes()
-        + " SELECT doc_a, doc_b, hamming, n_pairs FROM cls "
-        "ORDER BY hamming, doc_a, doc_b LIMIT 100"
-    ),
-)
-def docs_video_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual VIDEO near-dup — closes the modality trio's last gap
-    (text MinHash/SimHash, image dHash, audio energy-dHash, and now
-    video luma-dHash): REAL YUV4MPEG2 decode -> concatenated per-frame
-    luma planes -> 72-segment integer luma profile -> 64-bit
-    sign-of-delta fingerprint (operators/multimodal.y4m_luma_dhash)
-    -> signature grouping -> banded Hamming join, over spec-compliant
-    clips synthesized by attach_fake_y4m (stream-header parse, FRAME
-    parameter skip, per-colorspace raster sizing exercised on every
-    row; 4:2:0 and mono layouts both in play).  Emits the 100 closest
-    pair CLASSES by (hamming, doc_a, doc_b): each row is one exact-dup
-    cluster (distance 0) or one distinct-signature pair, represented
-    by its smallest member ids with its doc-pair multiplicity.
-
-    Scale: decode + fingerprinting is one Arrow-batched map pass
-    emitting 8 small ints per clip, memoized per corpus
-    (video_dhash_shared); the candidate join runs over DISTINCT
-    signatures only, on (band_idx, band) EQUALITY, hot buckets dropped
-    by DHASH_BAND_CAP — the same pair-class machine as the image and
-    audio twins (_sig_pair_classes).  The oracle re-derives every luma
-    bit from the generator's closed form and grades an all-pairs
-    formulation with the identical cap rule.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        _video_pair_classes(docs, 6)
-        .orderBy("hamming", "doc_a", "doc_b")
-        .limit(100)
-    )
-
-
-@query(
-    "docs_video_neardup_bill",
-    oracle=(
-        _video_dhash_ctes()
-        + " SELECT hamming, CAST(sum(n_pairs) AS BIGINT) AS n_pairs "
-        "FROM cls GROUP BY hamming ORDER BY hamming"
-    ),
-)
-def docs_video_neardup_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair-mass bill for the video near-dup join: DOC-pair counts per
-    Hamming distance 0..6, summed from multiplicity-weighted signature
-    classes exactly like the image and audio bills.  Grades EVERY pair
-    the banding finds (a recall hole anywhere in the 0..6 range
-    hash-mismatches against the all-pairs oracle).
-
-    Scale: shares the memoized fingerprint table and the
-    distinct-signature machinery with docs_video_neardup_pairs; the
-    rollup is one 7-group aggregate over signature-pair rows.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        _video_pair_classes(docs, 6)
-        .groupBy("hamming")
-        .agg(F.sum("n_pairs").cast("bigint").alias("n_pairs"))
-        .orderBy("hamming")
-    )
+for _modality in MODALITIES:
+    _register_neardup(_modality)

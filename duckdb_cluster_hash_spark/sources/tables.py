@@ -107,13 +107,3 @@ def _build_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "load_table's normalization for the new corpus flavor"
             )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a temp view for the SQL surface."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

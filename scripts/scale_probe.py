@@ -236,6 +236,18 @@ def ensure_corpus(factor: int) -> str:
     return out_dir
 
 
+def _reset() -> None:
+    """Drop every cross-pass cache perfbench/run.py's ``run_pass`` drops:
+    the session memo, the rank pins, and the quota split's cut-point
+    memo (which survives the other two), so each timed pass pays its own
+    materialization and cut-sample jobs."""
+    from duckdb_cluster_hash_spark.operators import dedup, ranking
+
+    dedup.clear_shared_cache()
+    ranking.release_rank_pins()
+    ranking.clear_cut_memo()
+
+
 def main() -> int:
     factors = [int(a) for a in sys.argv[1:]] or [3]
     big_dirs = {f: ensure_corpus(f) for f in factors}
@@ -253,8 +265,6 @@ def main() -> int:
     spark = start_session()
     cpus = host_cpus()
 
-    from duckdb_cluster_hash_spark.operators.dedup import clear_shared_cache
-    from duckdb_cluster_hash_spark.operators.ranking import release_rank_pins
     from duckdb_cluster_hash_spark.plans.catalog import QUERIES
 
     # warmup: JVM + python workers outside the timings
@@ -267,12 +277,12 @@ def main() -> int:
         # own codegen/python-worker paths on first execution, and without
         # this the small measurement absorbs that one-off cost and the
         # exponent reads artificially low (observed: k-core "faster" at
-        # 3x).  The memoized checkpoint caches are cleared after EVERY
-        # pass so each timed run pays its own materialization.
+        # 3x).  _reset() runs after EVERY pass so each timed run pays
+        # its own materialization and cut-sample jobs.
         QUERIES[name](spark, BASE).write.format("noop").mode(
             "overwrite"
         ).save()
-        clear_shared_cache()
+        _reset()
         passes = [("t_small", BASE)] + [
             (f"t_x{f}", big_dirs[f]) for f in factors
         ]
@@ -282,14 +292,13 @@ def main() -> int:
                 "overwrite"
             ).save()
             row[key] = round(time.time() - t0, 2)
-            clear_shared_cache()
-            release_rank_pins()
+            _reset()
             if name in COUNT_OUTPUT:
                 # verified-output mass, measured in THIS run (untimed;
                 # the memo is cleared again so the next timed pass pays
                 # its own materialization)
                 row[f"rows_{key}"] = QUERIES[name](spark, sf_dir).count()
-                clear_shared_cache()
+                _reset()
         for f in factors:
             row[f"exp_x{f}"] = round(
                 math.log(
@@ -322,12 +331,12 @@ def main() -> int:
     saved_block = _mm.PNM_DIVERSITY_BLOCK
     try:
         _mm.PNM_DIVERSITY_BLOCK = 1280
-        clear_shared_cache()
+        _reset()
         # untimed warm pass (codegen/python-worker JIT), memo cleared
         QUERIES["docs_image_neardup_bill"](spark, BASE).write.format(
             "noop"
         ).mode("overwrite").save()
-        clear_shared_cache()
+        _reset()
         for key, sf_dir in [("t_small", BASE)] + [
             (f"t_x{f}", big_dirs[f]) for f in factors
         ]:
@@ -336,7 +345,7 @@ def main() -> int:
                 "noop"
             ).mode("overwrite").save()
             wall = round(time.time() - t0, 2)
-            clear_shared_cache()
+            _reset()
             # untimed stats: m and candidate mass, from the same
             # signature pipeline the query runs
             from pyspark.sql import functions as _F
@@ -369,7 +378,7 @@ def main() -> int:
                 ).alias("cand_mass"),
                 _F.max("f").alias("max_bucket"),
             ).collect()[0]
-            clear_shared_cache()
+            _reset()
             diverse_rows.append(
                 {
                     "key": key,
@@ -381,7 +390,7 @@ def main() -> int:
             )
     finally:
         _mm.PNM_DIVERSITY_BLOCK = saved_block
-        clear_shared_cache()
+        _reset()
     print(json.dumps({"image_diverse_notch": diverse_rows}), file=sys.stderr)
 
     # First-execution warmth attribution for the two iterative graph
@@ -401,8 +410,7 @@ def main() -> int:
             "overwrite"
         ).save()
         warm_base[name] = round(time.time() - t0, 2)
-        clear_shared_cache()
-        release_rank_pins()
+        _reset()
     print(json.dumps({"warm_base_rerun": warm_base}), file=sys.stderr)
 
     flist = ", ".join(f"{f}x" for f in factors)

@@ -178,17 +178,13 @@ def test_image_neardup_is_banded(spark, sf_small):
     from duckdb_cluster_hash_spark.plans.catalog import _t
 
     docs = _t(spark, sf_small, "documents")
-    for shared in (
-        dtx.image_dhash_shared,
-        dtx.audio_dhash_shared,
-        dtx.video_dhash_shared,
-    ):
-        built = dtx._sig_pair_classes(shared(docs), 6)
+    for modality in dtx.MODALITIES:
+        built = dtx._sig_pair_classes(dtx.dhash_shared(docs, modality), 6)
         plan = plan_of(built)
-        assert "CartesianProduct" not in plan, shared.__name__
-        assert "BroadcastNestedLoopJoin" not in plan, shared.__name__
+        assert "CartesianProduct" not in plan, modality
+        assert "BroadcastNestedLoopJoin" not in plan, modality
         opt = optimized_of(built)
-        assert "band_idx" in opt and "band" in opt, shared.__name__
+        assert "band_idx" in opt and "band" in opt, modality
     for name in (
         "docs_image_neardup_pairs",
         "docs_image_neardup_bill",

@@ -571,6 +571,69 @@ def test_media_byte_features_values_and_edges(spark):
     assert (empty["byte_min"], empty["byte_max"]) == (-1, -1)
 
 
+# per-blob media kernel -> (media synthesizer, declared output schema)
+_MEDIA_KERNELS = {
+    "pnm_decode_stats": ("attach_fake_pnm", "PNM_STATS_SCHEMA"),
+    "wav_decode_stats": ("attach_fake_wav", "WAV_STATS_SCHEMA"),
+    "y4m_frame_stats": ("attach_fake_y4m", "Y4M_STATS_SCHEMA"),
+    "pnm_dhash": ("attach_fake_pnm", "DHASH_SCHEMA"),
+    "wav_energy_dhash": ("attach_fake_wav", "DHASH_SCHEMA"),
+    "y4m_luma_dhash": ("attach_fake_y4m", "DHASH_SCHEMA"),
+    "media_byte_features": ("attach_fake_media", "BYTE_FEATURES_SCHEMA"),
+}
+
+
+@pytest.mark.parametrize("kernel", list(_MEDIA_KERNELS))
+def test_media_kernels_on_empty_inputs(spark, kernel):
+    """A zero-row frame gives zero rows, and a 3-row frame spread over 8
+    partitions (most of them empty) gives the rows of its one-partition
+    twin — both with exactly the kernel's declared schema."""
+    from duckdb_cluster_hash_spark.operators import multimodal as mm
+
+    attach, schema = (getattr(mm, n) for n in _MEDIA_KERNELS[kernel])
+
+    def run(df):
+        return getattr(mm, kernel)(attach(df))
+
+    cols = "doc_id long, text string"
+    empty = run(spark.createDataFrame([], cols))
+    assert empty.schema == schema
+    assert empty.collect() == []
+    df = spark.createDataFrame([(2, "x"), (9, "y"), (1282, "z")], cols)
+    spread = run(df.repartition(8))
+    assert spread.schema == schema
+    got = sorted(spread.collect())
+    assert len(got) == 3
+    assert got == sorted(run(df.coalesce(1)).collect())
+
+
+def test_pnm_dhash_carry_on_empty_partitions(spark):
+    """The carried event-time column stays aligned with its row when most
+    partitions are empty, and a zero-row frame keeps the carried field."""
+    from pyspark.sql.types import StructType
+
+    from duckdb_cluster_hash_spark.operators import multimodal as mm
+
+    cols = "doc_id long, text string, ts timestamp"
+    df = spark.createDataFrame(
+        [(2, "x", None), (9, "y", None), (1282, "z", None)], cols
+    ).withColumn("ts", F.timestamp_seconds(F.col("doc_id")))
+    schema = StructType(mm.DHASH_SCHEMA.fields + [df.schema["ts"]])
+
+    def run(frame):
+        return mm.pnm_dhash(mm.attach_fake_pnm(frame), carry=("ts",))
+
+    empty = run(spark.createDataFrame([], cols))
+    assert empty.schema == schema
+    assert empty.collect() == []
+    spread = run(df.repartition(8))
+    assert spread.schema == schema
+    want_ts = {r["doc_id"]: r["ts"] for r in df.collect()}
+    rows = spread.collect()
+    assert {r["doc_id"]: r["ts"] for r in rows} == want_ts
+    assert sorted(rows) == sorted(run(df.coalesce(1)).collect())
+
+
 def test_repetition_stats_values(spark):
     from duckdb_cluster_hash_spark.functions.text import repetition_stats
 
